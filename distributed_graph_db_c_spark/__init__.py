@@ -12,7 +12,7 @@ plumbing) — as idiomatic PySpark DataFrame programs:
 - ``session``     SparkSession factory tuned for AQE + Arrow.
 - ``schemas``     canonical StructTypes (single source of truth).
 - ``sources``     ingest codecs: reference G-format matrices, parquet tables.
-- ``catalog``     GraphCatalog — named graphs as partitioned parquet
+- ``catalog``     GraphCatalog — one parquet row per named graph
                   (reference ops 1/2: add/modify = dynamic partition overwrite).
 - ``operators``   traversal (BFS/DFS-leaf/connected components), dedup,
                   similarity, text analysis, multimodal, relational queries.

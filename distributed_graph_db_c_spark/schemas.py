@@ -2,15 +2,18 @@
 
 The reference has a fixed implicit schema (an n x n 0/1 matrix per file,
 parsed by fscanf at secondary_server.c:283-292); here every dataset gets an
-explicit StructType.  Graphs are the GraphX/GraphFrames representation: a
-pair of DataFrames (edges + vertices) keyed by ``graph_id`` so one
-partitioned parquet dataset holds the whole catalog (reference: directory
-of G<i>.txt files, max 20 — ours is unbounded).
+explicit StructType.  The catalog stores one row per graph
+(``GRAPH_SCHEMA``, the reference's one G<i>.txt file per graph) in one
+``graph_id``-partitioned parquet dataset; readers see it as the
+GraphX/GraphFrames pair of DataFrames (edges + vertices) keyed by
+``graph_id`` (reference: directory of G<i>.txt files, max 20 — ours is
+unbounded).
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
+    ArrayType,
     IntegerType,
     LongType,
     StructField,
@@ -36,15 +39,18 @@ GRAPH_VERTICES_SCHEMA = StructType(
     ]
 )
 
-# Reference request model: struct message {long sequence_number; int
-# operation_number; char mtext[200];} (client.c:16-21) + the graph payload
-# in shared memory.  Ours: a requests DataFrame/stream row per request.
-REQUEST_SCHEMA = StructType(
+# Stored catalog row: one graph = its vertex ids + its edge list (both
+# directions, as in GRAPH_EDGES_SCHEMA).  ``edges`` is [] for an edgeless
+# graph.  The edge and vertex views above are ``inline``/``explode`` of it.
+GRAPH_SCHEMA = StructType(
     [
-        StructField("seq", LongType(), nullable=False),
-        StructField("op", IntegerType(), nullable=False),  # 1 add, 2 modify, 3 dfs, 4 bfs
-        StructField("graph_id", IntegerType(), nullable=True),
-        StructField("start", LongType(), nullable=True),  # 1-based start vertex (ops 3/4)
+        StructField("graph_id", IntegerType(), nullable=False),
+        StructField("vertices", ArrayType(LongType(), containsNull=False), nullable=False),
+        StructField(
+            "edges",
+            ArrayType(StructType(GRAPH_EDGES_SCHEMA.fields[1:]), containsNull=False),
+            nullable=False,
+        ),
     ]
 )
 

@@ -6,9 +6,9 @@ transport, not a stream model: no event time, no windows, no state beyond
 the graph files.  Re-expressed Spark-first:
 
 - ``requests``: the request channel as a streaming DataFrame dispatched by
-  ``foreachBatch`` — ops 1/2 mutate the GraphCatalog (dynamic partition
-  overwrite), ops 3/4 run the traversal kernels, replies land in a sink
-  table instead of a 200-char message buffer.
+  ``foreachBatch`` — ops 1/2 replace one graph row in the GraphCatalog
+  (dynamic partition overwrite), ops 3/4 run the traversal kernels,
+  replies land in a sink table instead of a 200-char message buffer.
 - ``windows``: watermarked tumbling/sliding/session-window aggregations
   over the events stream.  Builders are batch/stream agnostic — the SAME
   function registers as a batch query (DuckDB-oracle-checked) and runs in

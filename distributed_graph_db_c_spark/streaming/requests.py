@@ -65,20 +65,13 @@ RESULT_SCHEMA = "seq long, op int, graph_id int, id long, level long"
 
 def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: str) -> None:
     """Process one drained micro-batch: writes (seq order), then reads."""
-    spark = catalog.spark
-
     # -- write path (ops 1/2 — identical semantics: full replace) --------
     writes = (
         batch_df.filter(F.col("op").isin(1, 2)).orderBy("seq").collect()
     )  # payloads to the driver: the SHM handoff equivalent; small by model
     for row in writes:
-        pairs = [(int(e["src"]), int(e["dst"])) for e in (row["edges"] or [])]
-        sym = pairs + [(d, s) for s, d in pairs]
-        edges_df = spark.createDataFrame(sym or [], "src long, dst long")
-        verts_df = spark.createDataFrame(
-            [(int(v),) for v in (row["vertices"] or [])], "id long"
-        )
-        catalog.put(int(row["graph_id"]), edges_df, verts_df)
+        pairs = [(e["src"], e["dst"]) for e in (row["edges"] or [])]
+        catalog.put(row["graph_id"], row["vertices"] or [], pairs + [(d, s) for s, d in pairs])
 
     # -- read path (ops 3/4) — one fleet-wide traversal per op ------------
     reads = batch_df.filter(F.col("op").isin(3, 4)).select("seq", "op", "graph_id", "start")

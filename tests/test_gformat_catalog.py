@@ -23,6 +23,15 @@ G1_MATRIX = [
 ]
 
 
+def _payload(matrix):
+    """(vertices, edges) lists of a 0/1 matrix, the ``GraphCatalog.put``
+    payload: 1-based ids, every set cell an edge (both directions for a
+    symmetric matrix)."""
+    n = len(matrix)
+    edges = [(i + 1, j + 1) for i in range(n) for j in range(n) if matrix[i][j] == 1]
+    return list(range(1, n + 1)), edges
+
+
 def _write_matrix_file(path, matrix):
     with open(path, "w") as f:
         f.write(f"{len(matrix)}\n")
@@ -113,34 +122,44 @@ def test_read_gformat_dir_bulk_ingest(spark, tmp_path):
 
 
 def test_put_all_edgeless_replacement(spark, tmp_path):
-    """put() replacing a graph with an edgeless version must not leave the
-    old edges partition behind (dynamic overwrite writes no partition for
-    empty input)."""
+    """Replacing a graph with an edgeless version must not leave its old
+    edges behind, through ``put`` and through ``put_all`` (an edgeless
+    graph has no edge rows, so its row must still carry ``edges = []``)."""
     cat = GraphCatalog(spark, str(tmp_path / "catalog_empty"))
-    e1, v1 = matrix_to_edges(spark, G1_MATRIX, graph_id=1)
-    cat.put(1, e1, v1)
+    cat.put(1, *_payload(G1_MATRIX))
     assert cat.edges(1).count() == 8
-    empty_e, v_small = matrix_to_edges(spark, [[0] * 3 for _ in range(3)], graph_id=1)
-    cat.put(1, empty_e, v_small)
+    cat.put(1, *_payload([[0] * 3 for _ in range(3)]))
     assert cat.edges(1).count() == 0
     assert cat.vertices(1).count() == 3
+
+    e1, v1 = matrix_to_edges(spark, G1_MATRIX, graph_id=2)
+    cat.put_all(e1, v1)
+    assert cat.edges(2).count() == 8
+    empty_e, v_small = matrix_to_edges(spark, [[0] * 3 for _ in range(3)], graph_id=2)
+    cat.put_all(empty_e, v_small)
+    assert cat.edges(2).count() == 0
+    assert cat.vertices(2).count() == 3
+    assert cat.graph_ids() == [1, 2]
 
 
 def test_catalog_add_modify_isolation(spark, tmp_path):
     """Reference ops 1/2: add = create, modify = full replace; writes to one
     graph never disturb another (per-file writer locks -> partition-level
-    overwrite, SURVEY.md §2.1)."""
-    cat = GraphCatalog(spark, str(tmp_path / "catalog"))
-    e1, v1 = matrix_to_edges(spark, G1_MATRIX, graph_id=1)
-    cat.put(1, e1, v1)
+    overwrite, SURVEY.md §2.1).  Every write path leaves one dataset with
+    one ``graph_id=K`` directory per graph holding one parquet file (the
+    reference's one G-file per graph)."""
+    import os
+
+    root = tmp_path / "catalog"
+    cat = GraphCatalog(spark, str(root))
+    cat.put(1, *_payload(G1_MATRIX))
     star = [
         [0, 1, 1, 1],
         [1, 0, 0, 0],
         [1, 0, 0, 0],
         [1, 0, 0, 0],
     ]
-    e2, v2 = matrix_to_edges(spark, star, graph_id=2)
-    cat.put(2, e2, v2)
+    cat.put(2, *_payload(star))
     assert cat.graph_ids() == [1, 2]
     assert cat.edges(1).count() == 8
     assert cat.edges(2).count() == 6
@@ -151,8 +170,7 @@ def test_catalog_add_modify_isolation(spark, tmp_path):
         [1, 0, 1],
         [1, 1, 0],
     ]
-    e3, v3 = matrix_to_edges(spark, tri, graph_id=1)
-    cat.put(1, e3, v3)
+    cat.put(1, *_payload(tri))
     assert cat.edges(1).count() == 6
     assert cat.vertices(1).count() == 3
     assert cat.edges(2).count() == 6  # isolation
@@ -161,11 +179,42 @@ def test_catalog_add_modify_isolation(spark, tmp_path):
     plan = cat.edges(1)._jdf.queryExecution().executedPlan().toString()
     assert "graph_id" in plan
 
+    # layout after put_all (bulk add of 3), put (modify 2) and an edgeless put
+    e3, v3 = matrix_to_edges(spark, star, graph_id=3)
+    cat.put_all(e3, v3)
+    cat.put(2, *_payload(tri))
+    cat.put(4, *_payload([[0] * 3 for _ in range(3)]))
+    assert cat.graph_ids() == [1, 2, 3, 4]
+    assert cat.edges(4).count() == 0
+    assert cat.vertices(4).count() == 3
+    entries = sorted(p.name for p in root.iterdir() if not p.name.startswith(("_", ".")))
+    assert entries == [f"graph_id={k}" for k in (1, 2, 3, 4)]
+    for name in entries:
+        files = [f for f in os.listdir(root / name) if f.endswith(".parquet")]
+        assert len(files) == 1, (name, files)
+
+
+def test_catalog_isolation_in_static_overwrite_session(spark, tmp_path):
+    """A session built elsewhere may keep Spark's default STATIC partition
+    overwrite mode; a write must still replace only its own graphs."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        cat = GraphCatalog(spark, str(tmp_path / "catalog_static"))
+        cat.put(1, *_payload(G1_MATRIX))
+        e2, v2 = matrix_to_edges(spark, G1_MATRIX, graph_id=2)
+        cat.put_all(e2, v2)
+        cat.put(3, [1], [])
+        assert cat.graph_ids() == [1, 2, 3]
+        assert cat.edges(1).count() == cat.edges(2).count() == 8
+    finally:
+        spark.conf.set(key, prev)
+
 
 def test_catalog_drop(spark, tmp_path):
     cat = GraphCatalog(spark, str(tmp_path / "catalog2"))
-    e, v = matrix_to_edges(spark, G1_MATRIX, graph_id=7)
-    cat.put(7, e, v)
+    cat.put(7, *_payload(G1_MATRIX))
     assert cat.graph_ids() == [7]
     cat.drop(7)
     assert cat.graph_ids() == []
@@ -229,8 +278,7 @@ def test_write_gformat_dir_roundtrip(spark, tmp_path):
         [1, 0, 0, 0],
     ]
     for gid, m in [(1, G1_MATRIX), (2, star), (14, [[0] * 3 for _ in range(3)])]:
-        e, v = matrix_to_edges(spark, m, graph_id=gid)
-        cat.put(gid, e, v)
+        cat.put(gid, *_payload(m))
 
     out = tmp_path / "export"
     gids = write_gformat_dir(cat.edges(), cat.vertices(), str(out))

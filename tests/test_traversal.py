@@ -135,9 +135,7 @@ def test_max_graph_edges_memo_and_catalog_invalidation(spark, tmp_path):
 
     clear_graph_stats_cache()
     cat = GraphCatalog(spark, str(tmp_path / "memo_cat"))
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    v = spark.createDataFrame([(1,), (2,), (3,)], "id long")
-    cat.put(1, e, v)
+    cat.put(1, [1, 2, 3], [(1, 2), (2, 3)])
     assert len(_EDGE_STAT_CACHE) == 0  # put() invalidates, never populates
 
     assert max_graph_edges(cat.edges()) == 2
@@ -145,9 +143,7 @@ def test_max_graph_edges_memo_and_catalog_invalidation(spark, tmp_path):
     assert max_graph_edges(cat.edges()) == 2  # equivalent plan -> memo hit
     assert len(_EDGE_STAT_CACHE) == 1
 
-    e2 = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
-    v2 = spark.createDataFrame([(i,) for i in range(1, 5)], "id long")
-    cat.put(1, e2, v2)  # same path, new data -> cache cleared
+    cat.put(1, [1, 2, 3, 4], [(1, 2), (2, 3), (3, 4)])  # same path, new data -> cache cleared
     assert len(_EDGE_STAT_CACHE) == 0
     assert max_graph_edges(cat.edges()) == 3
     clear_graph_stats_cache()
