@@ -6,9 +6,9 @@ directions — the reference's unit of storage, one G<i>.txt file per graph
 holding n plus the matrix, written in one pass (primary_server.c:118-128).
 A graph's vertices and edges land in one file in one job commit, so a
 crash never leaves a torn graph, and an edgeless graph is ``edges = []``
-by construction.  Deliberate bound: a graph must fit in one row, the same
-bound the whole-graph-per-task ``bfs_fleet`` kernel already assumes
-(``operators.traversal._FLEET_MAX_EDGES``).
+by construction.  Deliberate bound: a graph must fit in one row, which is
+what lets the serving kernels (``operators.traversal.bfs_graph_rows`` /
+``dfs_leaves_graph_rows``) traverse each request's graph row in one task.
 
 Reference parity (SURVEY.md §2.1 ops 1/2):
 - op 1 "add graph"    (primary_server.c:45-157): create-or-overwrite one
@@ -29,6 +29,8 @@ client.c:15); ours is unbounded in the number of graphs.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -115,20 +117,25 @@ class GraphCatalog:
 
         clear_graph_stats_cache()
 
-    # -- read path: edge and vertex views over the graph rows --
+    # -- read path: graph rows, and edge and vertex views over them --
 
-    def _graphs(self, graph_id: int | None) -> DataFrame:
+    def graphs(self, ids: Iterable[int] | None = None) -> DataFrame:
+        """The ``GRAPH_SCHEMA`` rows of the graphs in ``ids`` (all graphs
+        when None); the ``isin`` filter prunes the scan to their partition
+        directories (visible in the scan's PartitionFilters)."""
         df = self.spark.read.schema(GRAPH_SCHEMA).parquet(self.root)
-        if graph_id is not None:
-            df = df.filter(F.col("graph_id") == graph_id)  # partition-pruned scan
+        if ids is not None:
+            df = df.filter(F.col("graph_id").isin(list(ids)))
         return df
 
     def edges(self, graph_id: int | None = None) -> DataFrame:
-        return self._graphs(graph_id).select("graph_id", F.inline("edges"))
+        ids = None if graph_id is None else [graph_id]
+        return self.graphs(ids).select("graph_id", F.inline("edges"))
 
     def vertices(self, graph_id: int | None = None) -> DataFrame:
-        return self._graphs(graph_id).select("graph_id", F.explode("vertices").alias("id"))
+        ids = None if graph_id is None else [graph_id]
+        return self.graphs(ids).select("graph_id", F.explode("vertices").alias("id"))
 
     def graph_ids(self) -> list[int]:
-        rows = self._graphs(None).select("graph_id").orderBy("graph_id").collect()
-        return [r["graph_id"] for r in rows]
+        # sorted here, not with orderBy: its range sampling costs two jobs
+        return sorted(r["graph_id"] for r in self.graphs().select("graph_id").collect())

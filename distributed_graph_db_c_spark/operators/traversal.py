@@ -24,6 +24,10 @@ giant graph parallelizes across its edge partitions.  AQE broadcasts the
 frontier side automatically while it is small.  ``localCheckpoint`` every
 few supersteps truncates lineage so plans do not grow unboundedly — the
 standard iterative-algorithm-on-Spark pattern.
+
+Serving reads take neither path: ``bfs_graph_rows``/``dfs_leaves_graph_rows``
+traverse each request's stored graph row (the catalog bounds a graph to one
+row) in one ``mapInPandas`` pass, with no supersteps and no shuffle.
 """
 
 from __future__ import annotations
@@ -353,6 +357,96 @@ def bfs_fleet(edges: DataFrame, starts: DataFrame) -> DataFrame:
         .cogroup(starts.groupBy("graph_id"))
         .applyInPandas(run_bfs, schema="graph_id int, id long, level long")
     )
+
+
+def _graph_row_kernel(leaves: bool):
+    """Per-partition function of the graph-row kernels: for each request
+    row, build the adjacency from its ``src``/``dst`` arrays and walk BFS
+    levels; with ``leaves`` keep only the DFS leaf set (degree <= 1, a
+    non-isolated start excluded) and no level.
+
+    Nested and referencing only builtins and pandas, so cloudpickle ships
+    it by value: a Python worker never imports this package, which need
+    not be on the worker's path."""
+
+    def run(batches):
+        for pdf in batches:
+            out = {"seq": [], "op": [], "graph_id": [], "id": [], "level": []}
+            cols = (pdf["seq"], pdf["op"], pdf["graph_id"], pdf["start"], pdf["src"], pdf["dst"])
+            for seq, op, gid, start, src, dst in zip(*cols):
+                adj = {}
+                if src is not None:  # None: the graph has no stored row
+                    for s, d in zip(src.tolist(), dst.tolist()):
+                        adj.setdefault(s, set()).add(d)
+                start = None if pd.isna(start) else int(start)
+                level = {start: 0}
+                frontier = [start]
+                depth = 0
+                while frontier:
+                    depth += 1
+                    nxt = []
+                    for v in frontier:
+                        for nb in adj.get(v, ()):
+                            if nb not in level:
+                                level[nb] = depth
+                                nxt.append(nb)
+                    frontier = nxt
+                if leaves:
+                    ids = [
+                        v
+                        for v in level
+                        if len(adj.get(v, ())) <= 1 and not (v == start and adj.get(v))
+                    ]
+                    levels = [None] * len(ids)
+                else:
+                    ids, levels = list(level), list(level.values())
+                out["seq"] += [seq] * len(ids)
+                out["op"] += [op] * len(ids)
+                out["graph_id"] += [gid] * len(ids)
+                out["id"] += ids
+                out["level"] += levels
+            yield pd.DataFrame(out)
+
+    return run
+
+
+def _run_graph_rows(rows: DataFrame, leaves: bool) -> DataFrame:
+    return rows.select(
+        "seq",
+        "op",
+        "graph_id",
+        "start",
+        F.col("edges.src").alias("src"),
+        F.col("edges.dst").alias("dst"),
+    ).mapInPandas(
+        _graph_row_kernel(leaves), schema="seq long, op int, graph_id int, id long, level long"
+    )
+
+
+def bfs_graph_rows(rows: DataFrame) -> DataFrame:
+    """Row-local BFS for request rows that carry their whole graph: the
+    serving kernel, one ``mapInPandas`` pass with no shuffle and no
+    supersteps (the reference's secondary server loads one G-file and
+    traverses it in-process, secondary_server.c:463-501).
+
+    Args:
+      rows: (seq, op, graph_id, start, edges) — requests left-joined to
+        their ``schemas.GRAPH_SCHEMA`` row; ``edges`` is NULL for a graph
+        that does not exist.
+    Returns:
+      (seq, op, graph_id, id, level) — the same rows :func:`bfs` gives per
+      request, including ``(start, 0)`` for a missing graph or a start
+      outside the graph.  Requires each graph to fit in one row, which the
+      catalog's storage shape already bounds.
+    """
+    return _run_graph_rows(rows, leaves=False)
+
+
+def dfs_leaves_graph_rows(rows: DataFrame) -> DataFrame:
+    """Row-local :func:`dfs_leaves` over the same input as
+    :func:`bfs_graph_rows`; ``level`` is NULL.  A graph with no leaf
+    reachable from the start (a triangle) yields no row."""
+    return _run_graph_rows(rows, leaves=True)
 
 
 # Per-graph edge count below which the cogrouped kernel wins: the whole

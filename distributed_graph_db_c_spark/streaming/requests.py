@@ -24,12 +24,19 @@ Payloads ride inside the request row (vertices + edge array), mirroring
 the SHM handoff for the reference's small graphs; bulk graph ingest is the
 G-format codec / catalog API instead (sources/gformat.py).
 
-Reads run FLEET-WIDE: every op-3/op-4 request in the batch becomes one
-instance key (its seq) in a single multi-graph traversal — one BFS job per
-batch regardless of how many requests it carries, the shape that scales.
+Reads are row-local, like the reference's secondary server that loads one
+G-file and traverses it in-process (secondary_server.c:283-326,463-501):
+each op-3/op-4 request is left-joined to its stored graph row, which holds
+the whole graph, and one ``mapInPandas`` pass walks every request's graph
+— no supersteps, no shuffle.  A micro-batch costs one collect, the write
+jobs, and one reply append (plus the broadcast of the requested graph
+rows), however many reads it carries; the fleet of requests is the
+parallelism.
 """
 
 from __future__ import annotations
+
+import functools
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -42,7 +49,10 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import GraphCatalog
-from ..operators.traversal import bfs, dfs_leaves
+# ``bfs`` and ``dfs_leaves`` are module attributes on purpose: they are the
+# per-op kernel seams that perfbench/run.py traces by name.
+from ..operators.traversal import bfs_graph_rows as bfs
+from ..operators.traversal import dfs_leaves_graph_rows as dfs_leaves
 
 REQUEST_SCHEMA = StructType(
     [
@@ -65,39 +75,31 @@ RESULT_SCHEMA = "seq long, op int, graph_id int, id long, level long"
 
 def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: str) -> None:
     """Process one drained micro-batch: writes (seq order), then reads."""
-    # -- write path (ops 1/2 — identical semantics: full replace) --------
-    writes = (
-        batch_df.filter(F.col("op").isin(1, 2)).orderBy("seq").collect()
-    )  # payloads to the driver: the SHM handoff equivalent; small by model
-    for row in writes:
-        pairs = [(e["src"], e["dst"]) for e in (row["edges"] or [])]
-        catalog.put(row["graph_id"], row["vertices"] or [], pairs + [(d, s) for s, d in pairs])
+    # the whole batch to the driver once: the SHM handoff equivalent, small
+    # by model; sorted here because orderBy's range sampling costs two jobs
+    rows = sorted(batch_df.collect(), key=lambda r: r["seq"])
 
-    # -- read path (ops 3/4) — one fleet-wide traversal per op ------------
-    reads = batch_df.filter(F.col("op").isin(3, 4)).select("seq", "op", "graph_id", "start")
-    if reads.isEmpty():
+    # -- write path (ops 1/2 — identical semantics: full replace) --------
+    for row in rows:
+        if row["op"] in (1, 2):
+            pairs = [(e["src"], e["dst"]) for e in (row["edges"] or [])]
+            catalog.put(row["graph_id"], row["vertices"] or [], pairs + [(d, s) for s, d in pairs])
+
+    # -- read path (ops 3/4) — every request joined to its graph row ------
+    reads = [(r["seq"], r["op"], r["graph_id"], r["start"]) for r in rows if r["op"] in (3, 4)]
+    if not reads:
         return
-    all_edges = catalog.edges()
-    for op, kernel in ((4, bfs), (3, dfs_leaves)):
-        reqs = reads.filter(F.col("op") == op)
-        if reqs.isEmpty():
-            continue
-        # Each request = its own traversal instance keyed by seq, so two
-        # requests against the same graph (or different graphs) run in the
-        # same multi-graph kernel invocation without sharing visited sets.
-        inst_edges = all_edges.join(
-            reqs.select("seq", "graph_id"), on="graph_id"
-        ).select(F.col("seq").alias("graph_id"), "src", "dst")
-        starts = reqs.select(F.col("seq").alias("graph_id"), F.col("start").alias("id"))
-        res = kernel(inst_edges, starts)
-        if "level" not in res.columns:
-            res = res.withColumn("level", F.lit(None).cast("long"))
-        out = (
-            res.withColumnRenamed("graph_id", "seq")
-            .join(reqs.select("seq", "op", "graph_id"), on="seq")
-            .select("seq", "op", "graph_id", "id", F.col("level").cast("long"))
-        )
-        out.write.mode("append").parquet(results_path)
+    reqs = catalog.spark.createDataFrame(reads, "seq long, op int, graph_id int, start long")
+    # left join: a request on a missing graph still gets its (start, 0) reply
+    with_graph = reqs.join(
+        catalog.graphs({r[2] for r in reads}).select("graph_id", "edges"), on="graph_id", how="left"
+    )
+    replies = [
+        kernel(with_graph.filter(F.col("op") == op))
+        for op, kernel in ((4, bfs), (3, dfs_leaves))
+        if any(r[1] == op for r in reads)
+    ]
+    functools.reduce(DataFrame.unionByName, replies).write.mode("append").parquet(results_path)
 
 
 def request_dispatcher(catalog: GraphCatalog, results_path: str):

@@ -369,3 +369,105 @@ def test_watermark_late_filter_lags_one_batch(spark, tmp_path):
         assert rows[m(100)] == 1 + 2 + 3
     finally:
         cleanup(scratch)
+
+
+def _reply_oracle(n: int, edges: list[tuple[int, int]], op: int, start: int | None) -> set:
+    """Pure-Python reply of one read: BFS ``(id, level)`` pairs, or the DFS
+    leaf set (degree <= 1, a non-isolated start excluded) with no level.
+    ``n = 0`` is a graph that does not exist."""
+    from collections import deque
+
+    adj: dict[int, set[int]] = {v: set() for v in range(1, n + 1)}
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    if start not in adj:
+        # Today's replies for a missing graph, a start outside the graph or
+        # no start: BFS gives (start, 0), DFS gives {start}.  ROADMAP item 3
+        # replaces them with not_found / bad_start statuses.
+        return {(start, 0)} if op == 4 else {(start, None)}
+    level = {start: 0}
+    queue = deque([start])
+    while queue:
+        v = queue.popleft()
+        for w in adj[v]:
+            if w not in level:
+                level[w] = level[v] + 1
+                queue.append(w)
+    if op == 4:
+        return set(level.items())
+    return {(v, None) for v in level if len(adj[v]) <= 1 and not (v == start and adj[v])}
+
+
+def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path):
+    """One mixed micro-batch over a seeded fleet: every read's reply rows
+    equal the pure-Python oracle, including the edge cases of today's
+    reply contract."""
+    import random
+
+    from distributed_graph_db_c_spark.catalog import GraphCatalog
+    from distributed_graph_db_c_spark.schemas import GRAPH_EDGES_SCHEMA, GRAPH_VERTICES_SCHEMA
+    from distributed_graph_db_c_spark.streaming.requests import (
+        REQUEST_SCHEMA,
+        RESULT_SCHEMA,
+        dispatch_requests,
+    )
+
+    rng = random.Random(11)
+    fleet: dict[int, tuple[int, list[tuple[int, int]]]] = {
+        1: (3, []),  # edgeless
+        2: (1, []),  # single vertex
+        3: (3, [(1, 2), (2, 3), (1, 3)]),  # triangle: no leaf anywhere
+    }
+    for gid in range(4, 10):
+        n = rng.randint(2, 30)
+        p = rng.choice((0.08, 0.2))
+        pairs = [(a, b) for a in range(1, n + 1) for b in range(a + 1, n + 1)]
+        fleet[gid] = (n, [e for e in pairs if rng.random() < p])
+    cat = GraphCatalog(spark, str(tmp_path / "catalog"))
+    cat.put_all(
+        spark.createDataFrame(
+            [(g, x, y) for g, (_, es) in fleet.items() for a, b in es for x, y in ((a, b), (b, a))],
+            GRAPH_EDGES_SCHEMA,
+        ),
+        spark.createDataFrame(
+            [(g, v) for g, (n, _) in fleet.items() for v in range(1, n + 1)], GRAPH_VERTICES_SCHEMA
+        ),
+    )
+
+    replaced = (4, [(1, 2), (2, 3), (3, 4)])  # graph 9 becomes a 4-path
+    reads = [(gid, 4, 1) for gid in range(1, 10)] + [(gid, 3, 1) for gid in range(1, 10)]
+    reads += [
+        (5, 4, fleet[5][0]),  # a second and third request on graph 5
+        (5, 3, fleet[5][0]),
+        (99, 4, 2),  # missing graph
+        (99, 3, 2),
+        (4, 4, 40),  # start outside the graph
+        (4, 3, 40),
+        (6, 4, None),  # no start vertex at all
+        (6, 3, None),
+    ]
+    rows = [(seq, op, gid, None, None, start) for seq, (gid, op, start) in enumerate(reads, 1)]
+    write_seq = len(rows) + 1
+    rows.append((write_seq, 2, 9, list(range(1, 5)), replaced[1], None))
+    rows.append((write_seq + 1, 4, 9, None, None, 4))  # reads the write before it
+    rows.append((write_seq + 2, 3, 9, None, None, 2))
+    fleet[9] = replaced
+    rng.shuffle(rows)  # dispatch orders the batch by seq itself
+
+    results = str(tmp_path / "results")
+    dispatch_requests(cat, spark.createDataFrame(rows, REQUEST_SCHEMA), results)
+
+    got: dict[int, set] = {}
+    for r in spark.read.schema(RESULT_SCHEMA).parquet(results).collect():
+        got.setdefault(r["seq"], set()).add((r["op"], r["graph_id"], r["id"], r["level"]))
+    for seq, op, gid, _, _, start in rows:
+        if op not in (3, 4):
+            continue
+        n, edges = fleet.get(gid, (0, []))
+        want = {(op, gid, v, lvl) for v, lvl in _reply_oracle(n, edges, op, start)}
+        assert got.pop(seq, set()) == want, (seq, op, gid, start)
+    assert not got  # no reply for the write
+    # The DFS on the triangle (graph 3) was checked above to write no row:
+    # today's contract cannot tell "empty" from "pending" (ROADMAP item 3).
+    assert _reply_oracle(*fleet[3], 3, 1) == set()
