@@ -8,7 +8,9 @@ A graph's vertices and edges land in one file in one job commit, so a
 crash never leaves a torn graph, and an edgeless graph is ``edges = []``
 by construction.  Deliberate bound: a graph must fit in one row, which is
 what lets the serving kernels (``operators.traversal.bfs_graph_rows`` /
-``dfs_leaves_graph_rows``) traverse each request's graph row in one task.
+``dfs_leaves_graph_rows``) traverse each request's graph row with SQL
+expressions evaluated on that row.  ``put`` builds its one-row frame from
+an Arrow table, so a write runs one single-task job and no Python worker.
 
 Reference parity (SURVEY.md §2.1 ops 1/2):
 - op 1 "add graph"    (primary_server.c:45-157): create-or-overwrite one
@@ -35,7 +37,7 @@ from collections.abc import Iterable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .schemas import GRAPH_SCHEMA
+from .schemas import GRAPH_SCHEMA, arrow_table
 
 
 class GraphCatalog:
@@ -51,7 +53,8 @@ class GraphCatalog:
         given, so pass both directions.  Other graphs' files are never
         rewritten (the per-file writer lock of primary_server.c:60 becomes
         partition-granularity isolation)."""
-        self._write(self.spark.createDataFrame([(graph_id, vertices, edges)], GRAPH_SCHEMA))
+        row = arrow_table([(graph_id, vertices, edges)], GRAPH_SCHEMA)
+        self._write(self.spark.createDataFrame(row, GRAPH_SCHEMA))
 
     def put_all(self, edges: DataFrame, vertices: DataFrame) -> None:
         """Bulk create-or-overwrite of every graph_id present in the input

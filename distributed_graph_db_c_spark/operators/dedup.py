@@ -746,8 +746,9 @@ def minhash_index_append(
         # hs_rows (round 16, guide §1.2): a caller that already counted
         # the SAME pinned hs frame (the streaming handler's indexable
         # guard runs hs.count() per batch) passes it and this job is
-        # skipped — identical value by construction
-        batch_rows = hs.count() if hs_rows is None else int(hs_rows)
+        # skipped — identical value by construction.  Without hs_df the
+        # frame is this function's own, so a passed count is ignored
+        batch_rows = hs.count() if owned or hs_rows is None else int(hs_rows)
         if check_duplicate_ids:
             # one slim semi-join per part against the 2-column shingle
             # store's id column; a hit refuses BEFORE any mutation.

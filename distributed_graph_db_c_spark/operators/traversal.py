@@ -27,7 +27,8 @@ standard iterative-algorithm-on-Spark pattern.
 
 Serving reads take neither path: ``bfs_graph_rows``/``dfs_leaves_graph_rows``
 traverse each request's stored graph row (the catalog bounds a graph to one
-row) in one ``mapInPandas`` pass, with no supersteps and no shuffle.
+row) with SQL higher-order-function expressions on that row — no
+supersteps, no shuffle, and no Python worker.
 """
 
 from __future__ import annotations
@@ -359,75 +360,57 @@ def bfs_fleet(edges: DataFrame, starts: DataFrame) -> DataFrame:
     )
 
 
-def _graph_row_kernel(leaves: bool):
-    """Per-partition function of the graph-row kernels: for each request
-    row, build the adjacency from its ``src``/``dst`` arrays and walk BFS
-    levels; with ``leaves`` keep only the DFS leaf set (degree <= 1, a
-    non-isolated start excluded) and no level.
+# BFS over one graph row, as one SQL expression: each ``aggregate`` step
+# moves the frontier ``fr`` into the visited list ``vis`` (its level ``d``
+# into ``lvl``) and steps along every edge leaving it.  ``array_except``
+# dedupes the next frontier and drops what was already reached.  A graph
+# reaches at most size(edges) + 1 vertices, so size(edges) + 1 steps always
+# drain the frontier; the steps after that return ``acc`` as it is.  A
+# NULL start matches no edge (``filter`` drops the NULL ``array_contains``).
+_BFS_WALK = """aggregate(
+    sequence(0, size(edges)),
+    named_struct(
+        'vis', CAST(array() AS array<bigint>), 'lvl', CAST(array() AS array<bigint>),
+        'fr', array(start), 'd', CAST(0 AS bigint)),
+    (acc, i) -> IF(size(acc.fr) = 0, acc, named_struct(
+        'vis', concat(acc.vis, acc.fr),
+        'lvl', concat(acc.lvl, array_repeat(acc.d, size(acc.fr))),
+        'fr', array_except(
+            transform(filter(edges, e -> array_contains(acc.fr, e.src)), e -> e.dst),
+            concat(acc.vis, acc.fr)),
+        'd', acc.d + 1)))"""
 
-    Nested and referencing only builtins and pandas, so cloudpickle ships
-    it by value: a Python worker never imports this package, which need
-    not be on the worker's path."""
+# Vertices with >= 2 distinct neighbours: in the sorted edge list a
+# vertex's edges are adjacent, so some adjacent pair shares its ``src``
+# with different ``dst``s.  Counting distinct neighbours keeps a duplicated
+# edge from turning a leaf into a hub.  (Never ``array_distinct`` the edge
+# structs: it is quadratic on structs.)
+_HUBS = """filter(
+    zip_with(sorted, slice(sorted, 2, size(sorted)),
+        (a, b) -> IF(a.src = b.src AND a.dst != b.dst, a.src, NULL)),
+    v -> v IS NOT NULL)"""
 
-    def run(batches):
-        for pdf in batches:
-            out = {"seq": [], "op": [], "graph_id": [], "id": [], "level": []}
-            cols = (pdf["seq"], pdf["op"], pdf["graph_id"], pdf["start"], pdf["src"], pdf["dst"])
-            for seq, op, gid, start, src, dst in zip(*cols):
-                adj = {}
-                if src is not None:  # None: the graph has no stored row
-                    for s, d in zip(src.tolist(), dst.tolist()):
-                        adj.setdefault(s, set()).add(d)
-                start = None if pd.isna(start) else int(start)
-                level = {start: 0}
-                frontier = [start]
-                depth = 0
-                while frontier:
-                    depth += 1
-                    nxt = []
-                    for v in frontier:
-                        for nb in adj.get(v, ()):
-                            if nb not in level:
-                                level[nb] = depth
-                                nxt.append(nb)
-                    frontier = nxt
-                if leaves:
-                    ids = [
-                        v
-                        for v in level
-                        if len(adj.get(v, ())) <= 1 and not (v == start and adj.get(v))
-                    ]
-                    levels = [None] * len(ids)
-                else:
-                    ids, levels = list(level), list(level.values())
-                out["seq"] += [seq] * len(ids)
-                out["op"] += [op] * len(ids)
-                out["graph_id"] += [gid] * len(ids)
-                out["id"] += ids
-                out["level"] += levels
-            yield pd.DataFrame(out)
-
-    return run
+# The DFS leaf set: reached vertices that are not hubs, minus the start if
+# it has an edge (the reference never reports a non-isolated start).
+_LEAVES = """IF(coalesce(exists(edges, e -> e.src = start), false),
+    array_remove(array_except(walk.vis, hubs), start),
+    array_except(walk.vis, hubs))"""
 
 
-def _run_graph_rows(rows: DataFrame, leaves: bool) -> DataFrame:
+def _walk_graph_rows(rows: DataFrame) -> DataFrame:
+    # a missing graph (NULL edges) is walked as an edgeless one
+    no_edges = F.expr("CAST(array() AS array<struct<src:bigint,dst:bigint>>)")
     return rows.select(
-        "seq",
-        "op",
-        "graph_id",
-        "start",
-        F.col("edges.src").alias("src"),
-        F.col("edges.dst").alias("dst"),
-    ).mapInPandas(
-        _graph_row_kernel(leaves), schema="seq long, op int, graph_id int, id long, level long"
-    )
+        "seq", "op", "graph_id", "start", F.coalesce("edges", no_edges).alias("edges")
+    ).withColumn("walk", F.expr(_BFS_WALK))
 
 
 def bfs_graph_rows(rows: DataFrame) -> DataFrame:
     """Row-local BFS for request rows that carry their whole graph: the
-    serving kernel, one ``mapInPandas`` pass with no shuffle and no
-    supersteps (the reference's secondary server loads one G-file and
-    traverses it in-process, secondary_server.c:463-501).
+    serving kernel, Catalyst expressions on each row with no shuffle, no
+    supersteps and no Python worker (the reference's secondary server
+    loads one G-file and traverses it in-process,
+    secondary_server.c:463-501).
 
     Args:
       rows: (seq, op, graph_id, start, edges) — requests left-joined to
@@ -439,14 +422,32 @@ def bfs_graph_rows(rows: DataFrame) -> DataFrame:
       outside the graph.  Requires each graph to fit in one row, which the
       catalog's storage shape already bounds.
     """
-    return _run_graph_rows(rows, leaves=False)
+    return _walk_graph_rows(rows).select(
+        "seq",
+        "op",
+        "graph_id",
+        F.inline(
+            F.expr("zip_with(walk.vis, walk.lvl, (v, l) -> named_struct('id', v, 'level', l))")
+        ),
+    )
 
 
 def dfs_leaves_graph_rows(rows: DataFrame) -> DataFrame:
     """Row-local :func:`dfs_leaves` over the same input as
     :func:`bfs_graph_rows`; ``level`` is NULL.  A graph with no leaf
     reachable from the start (a triangle) yields no row."""
-    return _run_graph_rows(rows, leaves=True)
+    return (
+        _walk_graph_rows(rows)
+        .withColumn("sorted", F.array_sort("edges"))
+        .withColumn("hubs", F.expr(_HUBS))
+        .select(
+            "seq",
+            "op",
+            "graph_id",
+            F.explode(F.expr(_LEAVES)).alias("id"),
+            F.lit(None).cast("long").alias("level"),
+        )
+    )
 
 
 # Per-graph edge count below which the cogrouped kernel wins: the whole

@@ -12,6 +12,8 @@ unbounded).
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -53,6 +55,18 @@ GRAPH_SCHEMA = StructType(
         ),
     ]
 )
+
+
+def arrow_table(rows: list[tuple], schema: StructType) -> pa.Table:
+    """In-memory ``rows`` (tuples in ``schema``'s field order; a struct
+    value may be a tuple) as an Arrow table typed by ``schema``.
+    ``spark.createDataFrame`` takes such a table over Arrow whatever the
+    session's Arrow setting, where a list of rows becomes a pickled RDD
+    that needs a Python worker."""
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array(list(c), f.type) for c, f in zip(zip(*rows), arrow)]
+    return pa.Table.from_arrays(cols, schema=arrow)
+
 
 TABLE_NAMES = [
     "region",

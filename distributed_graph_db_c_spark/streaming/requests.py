@@ -27,11 +27,12 @@ G-format codec / catalog API instead (sources/gformat.py).
 Reads are row-local, like the reference's secondary server that loads one
 G-file and traverses it in-process (secondary_server.c:283-326,463-501):
 each op-3/op-4 request is left-joined to its stored graph row, which holds
-the whole graph, and one ``mapInPandas`` pass walks every request's graph
-— no supersteps, no shuffle.  A micro-batch costs one collect, the write
-jobs, and one reply append (plus the broadcast of the requested graph
-rows), however many reads it carries; the fleet of requests is the
-parallelism.
+the whole graph, and SQL higher-order-function expressions walk every
+request's graph inside the JVM — no supersteps, no shuffle, no Python
+worker.  The request frame is built from an Arrow table, not a pickled
+RDD.  A micro-batch costs one collect, the write jobs, and one reply
+append (plus the broadcast of the requested graph rows), however many
+reads it carries; the fleet of requests is the parallelism.
 """
 
 from __future__ import annotations
@@ -49,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import GraphCatalog
+from ..schemas import arrow_table
 # ``bfs`` and ``dfs_leaves`` are module attributes on purpose: they are the
 # per-op kernel seams that perfbench/run.py traces by name.
 from ..operators.traversal import bfs_graph_rows as bfs
@@ -72,6 +74,26 @@ REQUEST_SCHEMA = StructType(
 
 RESULT_SCHEMA = "seq long, op int, graph_id int, id long, level long"
 
+# One read request as the kernels take it, before the join to its graph row.
+READ_SCHEMA = StructType([REQUEST_SCHEMA[c] for c in ("seq", "op", "graph_id", "start")])
+
+
+def read_replies(catalog: GraphCatalog, reads: list[tuple]) -> DataFrame:
+    """The reply rows (``RESULT_SCHEMA``) of ``reads``, ``READ_SCHEMA``
+    tuples: every request left-joined to its graph row and walked by the
+    kernel of its op."""
+    reqs = catalog.spark.createDataFrame(arrow_table(reads, READ_SCHEMA), READ_SCHEMA)
+    # left join: a request on a missing graph still gets its (start, 0) reply
+    with_graph = reqs.join(
+        catalog.graphs({r[2] for r in reads}).select("graph_id", "edges"), on="graph_id", how="left"
+    )
+    replies = [
+        kernel(with_graph.filter(F.col("op") == op))
+        for op, kernel in ((4, bfs), (3, dfs_leaves))
+        if any(r[1] == op for r in reads)
+    ]
+    return functools.reduce(DataFrame.unionByName, replies)
+
 
 def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: str) -> None:
     """Process one drained micro-batch: writes (seq order), then reads."""
@@ -89,17 +111,7 @@ def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: 
     reads = [(r["seq"], r["op"], r["graph_id"], r["start"]) for r in rows if r["op"] in (3, 4)]
     if not reads:
         return
-    reqs = catalog.spark.createDataFrame(reads, "seq long, op int, graph_id int, start long")
-    # left join: a request on a missing graph still gets its (start, 0) reply
-    with_graph = reqs.join(
-        catalog.graphs({r[2] for r in reads}).select("graph_id", "edges"), on="graph_id", how="left"
-    )
-    replies = [
-        kernel(with_graph.filter(F.col("op") == op))
-        for op, kernel in ((4, bfs), (3, dfs_leaves))
-        if any(r[1] == op for r in reads)
-    ]
-    functools.reduce(DataFrame.unionByName, replies).write.mode("append").parquet(results_path)
+    read_replies(catalog, reads).write.mode("append").parquet(results_path)
 
 
 def request_dispatcher(catalog: GraphCatalog, results_path: str):
@@ -160,17 +172,14 @@ class RequestServer:
         """Enqueue one request batch (list of REQUEST_SCHEMA-shaped rows)
         as a single file — one micro-batch on the server side."""
         import os
-        import shutil
 
-        df = self.spark.createDataFrame(rows, REQUEST_SCHEMA)
-        tmp = os.path.join(self.in_dir, f"_stage{self._n}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        shutil.move(
-            os.path.join(tmp, part),
-            os.path.join(self.in_dir, f"req{self._n:06d}.parquet"),
-        )
-        shutil.rmtree(tmp)
+        import pyarrow.parquet as pq
+
+        # written under a "_" name, which the file source skips, then
+        # renamed into place: the stream never lists a half-written file
+        tmp = os.path.join(self.in_dir, f"_req{self._n:06d}.parquet")
+        pq.write_table(arrow_table(rows, REQUEST_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(self.in_dir, f"req{self._n:06d}.parquet"))
         self._n += 1
 
     def replies(self, seq: int | None = None) -> DataFrame:

@@ -215,6 +215,35 @@ def test_retrain_trigger_and_status_recompute_from_disk(spark):
         _clean(spark, "apx_rt")
 
 
+def test_append_ignores_hs_rows_without_hs_df(spark):
+    """``hs_rows`` is the count of a caller's ``hs_df``; an append that
+    shingles the batch itself counts its own frame, so a stray count
+    cannot skew the ledger away from what minhash_index_status reads
+    back from disk."""
+    docs = _docs(spark, 0, 50)
+    base = docs.filter(F.col("doc_id") < 40)
+    delta = docs.filter(F.col("doc_id") >= 40)  # 10 rows
+    for p in ("apx_hs", "apx_hs_ref"):
+        _clean(spark, p)
+    try:
+        minhash_index_build(base, "apx_hs")
+        minhash_index_build(base, "apx_hs_ref")
+        got = minhash_index_append(delta, "apx_hs", hs_rows=999)
+        want = minhash_index_append(delta, "apx_hs_ref")
+        assert got == want
+        assert got["batch_rows"] == 10
+        st = minhash_index_status(spark, "apx_hs")
+        assert st == minhash_index_status(spark, "apx_hs_ref")
+        assert (st["appended_rows"], st["appended_frac"], st["retrain_due"]) == (
+            got["appended_rows"],
+            got["appended_frac"],
+            got["retrain_due"],
+        )
+    finally:
+        for p in ("apx_hs", "apx_hs_ref"):
+            _clean(spark, p)
+
+
 def test_vacuum_destroys_doomed_generation_segments(spark):
     """A vacuumed generation's append segments die with it — markers
     first, then tables/files — and a reader pinned to the vacuumed

@@ -471,3 +471,75 @@ def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path):
     # The DFS on the triangle (graph 3) was checked above to write no row:
     # today's contract cannot tell "empty" from "pending" (ROADMAP item 3).
     assert _reply_oracle(*fleet[3], 3, 1) == set()
+
+
+def test_dispatch_duplicate_edges_and_dense_graph_match_oracle(spark, tmp_path):
+    """The leaf rule counts DISTINCT neighbours: a write whose payload lists
+    an edge in both directions stores that edge twice per direction, and
+    its endpoint must still be a leaf.  A dense n=300 graph (~45k stored
+    edges) checks the walk beyond the catalog's 30-node graphs."""
+    import random
+
+    from distributed_graph_db_c_spark.catalog import GraphCatalog
+    from distributed_graph_db_c_spark.streaming.requests import (
+        REQUEST_SCHEMA,
+        RESULT_SCHEMA,
+        dispatch_requests,
+    )
+
+    rng = random.Random(5)
+    dup = (4, [(1, 2), (2, 1), (2, 3)])  # 1-2 twice; 4 isolated
+    n = 300
+    dense = (n, [(a, b) for a in range(1, n + 1) for b in range(a + 1, n + 1) if rng.random() < 0.5])
+    fleet = {1: dup, 2: dense}
+    reqs = [(1, gid, list(range(1, m + 1)), es, None) for gid, (m, es) in fleet.items()]
+    reqs += [(op, 1, None, None, s) for op in (3, 4) for s in (1, 2, 3, 4)]
+    reqs += [(op, 2, None, None, s) for op in (3, 4) for s in (1, 150, 300)]
+    rows = [(seq, *r) for seq, r in enumerate(reqs, 1)]
+
+    results = str(tmp_path / "results")
+    dispatch_requests(
+        GraphCatalog(spark, str(tmp_path / "catalog")),
+        spark.createDataFrame(rows, REQUEST_SCHEMA),
+        results,
+    )
+    got: dict[int, set] = {}
+    for r in spark.read.schema(RESULT_SCHEMA).parquet(results).collect():
+        got.setdefault(r["seq"], set()).add((r["id"], r["level"]))
+    for seq, op, gid, _, _, start in rows:
+        if op in (3, 4):
+            assert got.pop(seq, set()) == _reply_oracle(*fleet[gid], op, start), (gid, op, start)
+    assert not got
+    # vertex 1's two stored (1, 2) edges are one neighbour: a leaf
+    assert _reply_oracle(*dup, 3, 2) == {(1, None), (3, None)}
+
+
+def test_serving_frames_run_no_python(spark, tmp_path, monkeypatch):
+    """The frames a served micro-batch builds run inside the JVM: the
+    reply plan holds no Python evaluation node, and neither the request
+    frame nor a write's graph-row frame scans a pickled Python RDD."""
+    from distributed_graph_db_c_spark.catalog import GraphCatalog
+    from distributed_graph_db_c_spark.streaming.requests import read_replies
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    cat = GraphCatalog(spark, str(tmp_path / "catalog"))
+    cat.put(1, [1, 2, 3], [(1, 2), (2, 1), (2, 3), (3, 2)])
+    replies = read_replies(cat, [(1, 4, 1, 1), (2, 3, 1, 1), (3, 4, 9, 2)])
+    written = []
+    monkeypatch.setattr(cat, "_write", written.append)
+    cat.put(2, [1, 2], [(1, 2), (2, 1)])
+
+    python_nodes = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+    assert not [n for n in python_nodes if n in plan(replies)], plan(replies)
+    for df in (replies, *written):
+        assert "ExistingRDD" not in plan(df), plan(df)
+    assert len(written) == 1
+    assert sorted(tuple(r) for r in replies.collect()) == [
+        (1, 4, 1, 1, 0),
+        (1, 4, 1, 2, 1),
+        (1, 4, 1, 3, 2),
+        (2, 3, 1, 3, None),
+        (3, 4, 9, 2, 0),
+    ]

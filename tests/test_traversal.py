@@ -149,54 +149,6 @@ def test_max_graph_edges_memo_and_catalog_invalidation(spark, tmp_path):
     clear_graph_stats_cache()
 
 
-def test_graph_row_kernel_unpickles_without_the_package(tmp_path):
-    """The graph-row kernels' per-partition function must travel by value:
-    a Python worker without this package on its path (a driver started
-    outside the repository root) must load and run it.  A reference to a
-    module-level name of the package would be pickled by reference, and
-    unpickling it here raises ModuleNotFoundError."""
-    import pickle
-    import subprocess
-    import sys
-
-    import numpy as np
-    import pandas as pd
-    from pyspark import cloudpickle
-
-    from distributed_graph_db_c_spark.operators.traversal import _graph_row_kernel
-
-    path = np.array([1, 2, 2, 3], dtype="int64"), np.array([2, 1, 3, 2], dtype="int64")
-    pdf = pd.DataFrame(
-        {
-            "seq": [1, 2],
-            "op": [4, 4],
-            "graph_id": [1, 9],
-            "start": [1, 7],
-            "src": [path[0], None],  # graph 9 has no stored row
-            "dst": [path[1], None],
-        }
-    )
-    payload = cloudpickle.dumps(([_graph_row_kernel(False), _graph_row_kernel(True)], pdf))
-    child = (
-        "import pickle, sys\n"
-        "import pandas as pd\n"
-        "fns, pdf = pickle.loads(sys.stdin.buffer.read())\n"
-        "out = [pd.concat(list(f(iter([pdf])))) for f in fns]\n"
-        "sys.stdout.buffer.write(pickle.dumps(out))\n"
-    )
-    proc = subprocess.run(
-        [sys.executable, "-I", "-c", child], input=payload, capture_output=True, cwd=tmp_path
-    )
-    assert proc.returncode == 0, proc.stderr.decode()
-    bfs_out, leaves_out = pickle.loads(proc.stdout)
-
-    def rows(df):
-        return set(df[["seq", "id", "level"]].astype(object).itertuples(index=False, name=None))
-
-    assert rows(bfs_out) == {(1, 1, 0), (1, 2, 1), (1, 3, 2), (2, 7, 0)}
-    assert rows(leaves_out) == {(1, 3, None), (2, 7, None)}
-
-
 def test_toposort_levels_diamond_vs_bfs(spark):
     """Reconverging diamond + tail: 1->2->4->5 and 1->3->4; BFS gives
     node 4 level 2 either way, but TOPO level must be the LONGEST path
