@@ -1,9 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry contract of the engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` is the smoke check; ``queries()[name]`` runs one
+registered query at a given scale factor and ``oracle_sql()[name]`` is its
+DuckDB oracle over the same parquet tables (row-count + schema +
+order-insensitive value compare; ``tools/oracle_check.py`` runs it).  A
+query without an oracle gets a rows-only check.  Both dicts follow the
+registry's registration order.
 
 All real logic lives in ``distributed_graph_db_c_spark``; this module just
 exposes the query registry.

@@ -883,7 +883,8 @@ def lsh_index_append(
     Concurrency contract = the minhash append's: the shared build claim
     serializes builds/rebuilds/appends; pre-mutation failures (no
     generation, width mismatch detected at write, duplicate ids,
-    internal duplicates) release the claim — the index is untouched;
+    internal duplicates, a ``buckets_df`` whose width differs from the
+    recorded n_tables) release the claim — the index is untouched;
     the segment-marker create is the atomic commit point.  Append means
     NEW ids (re-ingest = rebuild, not append); the delta is checked
     against base + published segments and for internal id duplicates
@@ -995,7 +996,6 @@ def lsh_index_append(
     except BaseException:
         fs.delete(jpath(claim), False)
         raise
-    # MUTATION SECTION: claim is success-only from here.
     sp = index_seg_prefix(table_prefix, gen, seg)
     # buckets_df: the sharing contract (round 16, guide §4) — caller
     # guarantees it was bucketed under the index's RECORDED
@@ -1009,14 +1009,33 @@ def lsh_index_append(
             id_col=id_col, vec_col=vec_col,
         )
     )
+    # a buckets row of another width fills table slots no read probes,
+    # or leaves probed ones empty: refused inside the bucket write's own
+    # projection (no extra job), before any marker, with the claim
+    # released — the next attempt's write replaces any partial table
+    checked_buckets = F.when(
+        F.size(F.col("buckets")) == n_tables, F.col("buckets")
+    ).otherwise(
+        F.raise_error(
+            F.lit(
+                f"lsh_index_append({table_prefix}): buckets width != "
+                f"the index's recorded n_tables {n_tables}"
+            )
+        )
+    )
     bt = bkt.select(
         F.col(id_col).alias("id"),
-        F.posexplode("buckets").alias("table", "bucket"),
+        F.posexplode(checked_buckets).alias("table", "bucket"),
     )
     bkeyed = bt.select(
         "id", F.xxhash64(F.col("table"), F.col("bucket")).alias("bkey")
     )
-    write_bucketed(bkeyed, f"{sp}_buckets", key="bkey", n_buckets=n_buckets)
+    try:
+        write_bucketed(bkeyed, f"{sp}_buckets", key="bkey", n_buckets=n_buckets)
+    except BaseException:
+        fs.delete(jpath(claim), False)
+        raise
+    # MUTATION SECTION: claim is success-only from here.
     checked_norm = F.when(
         F.size(F.col(vec_col)) == dim, norm2_seq(F.col(vec_col))
     ).otherwise(

@@ -200,8 +200,7 @@ FROM cross1 WHERE old_id % 4 IN (2, 3)
 
 @register("dedup_index_time_travel", oracle=_TIME_TRAVEL_SQL)
 def dedup_index_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MINHASH-INDEX TIME TRAVEL (round 12, registered after the window
-    filled — AWAITING_FIRST_SLOT, an r13 driver slot): the
+    """MINHASH-INDEX TIME TRAVEL (round 12): the
     sim_ivf_time_travel pattern applied to the text-dedup index, now
     that it carries the same generation layout.  The nightly story:
     generation 1 indexes the corpus snapshot (doc_id %4 != 0);
@@ -315,10 +314,9 @@ SELECT 'appended' AS phase, old_id, new_id, jaccard FROM cross1
 
 @register("dedup_index_append", oracle=_INDEX_APPEND_SQL)
 def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MINHASH-INDEX APPEND lifecycle (round 12, registered after the
-    window filled — AWAITING_FIRST_SLOT, an r13 driver slot; the banked
-    handoff candidate e): grow the persisted text-dedup index at DELTA
-    cost instead of a full-corpus rebuild.  The nightly story: the
+    """MINHASH-INDEX APPEND lifecycle (round 12): grow the persisted
+    text-dedup index at DELTA cost instead of a full-corpus rebuild.
+    The nightly story: the
     corpus snapshot (doc_id %4 in (1, 2)) is indexed as generation 1;
     the next day's crawl (%4 == 3) lands via minhash_index_append as
     the generation's first immutable append SEGMENT (only the delta is
@@ -421,9 +419,7 @@ FROM cross1 WHERE old_id % 4 IN (2, 3)
 
 @register("dedup_index_vacuum", oracle=_INDEX_VACUUM_SQL)
 def dedup_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MINHASH-INDEX VACUUM lifecycle (round 12, late —
-    AWAITING_FIRST_SLOT, an r13 driver slot; the banked handoff
-    candidate d, previously pytest-pinned only): retention enforcement
+    """MINHASH-INDEX VACUUM lifecycle (round 12): retention enforcement
     on the months-lived index.  The story completes the other lifecycle
     gates': generation 1 indexes the snapshot (base %4 in (1, 2) PLUS
     the %4 == 3 rows landed as an append SEGMENT — so the vacuum
@@ -1547,10 +1543,9 @@ FROM ({_decontaminate_sql()})
 
 @register("dedup_decontaminate_append", oracle=_decontaminate_append_sql())
 def dedup_decontaminate_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DECONTAMINATION-INDEX APPEND lifecycle (round 12, registered
-    after the window filled — AWAITING_FIRST_SLOT, an r13 driver slot;
-    with dedup_index_append this completes the banked handoff
-    candidate e for BOTH persisted text/embedding indexes): grow the
+    """DECONTAMINATION-INDEX APPEND lifecycle (round 12; with
+    dedup_index_append this covers BOTH persisted text/embedding
+    indexes): grow the
     benchmark-protection index at DELTA cost.  The nightly story: half
     the train corpus is indexed (lsh_index_build, generation 1, plane
     parameters sized and RECORDED for that half); the other half lands

@@ -810,10 +810,9 @@ _IVF_RETRAIN_SQL = _ivf_oracle_sql(
 
 @register("sim_ivf_retrain_swap", oracle=_IVF_RETRAIN_SQL)
 def sim_ivf_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL IVF index lifecycle (round 10, registered after the
-    window filled — AWAITING_FIRST_SLOT, first in line for an r11
-    driver slot): build on the 80% base, ivf_append the 20% delta —
-    the gate corpus sits exactly at the default retrain threshold, so
+    """The FULL IVF index lifecycle (round 10): build on the 80% base,
+    ivf_append the 20% delta — the gate corpus sits exactly at the
+    default retrain threshold, so
     the audit flips retrain_due — then act on the trigger:
     ivf_retrain_swap re-seeds the quantizer over the CURRENT corpus
     and publishes the rebuilt index as the NEXT numbered generation
@@ -888,10 +887,9 @@ SELECT CAST(2 AS BIGINT) AS generation, qid, vec_id, cosine FROM g2
 
 @register("sim_ivf_time_travel", oracle=_IVF_TIME_TRAVEL_SQL)
 def sim_ivf_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INDEX TIME TRAVEL (round 11, registered after the window filled —
-    AWAITING_FIRST_SLOT, first in line for an r12 driver slot): the
-    driver-gated form of the generation-versioned layout.  Lifecycle:
-    build(base 80%) -> append(delta 20%, trips retrain_due) ->
+    """INDEX TIME TRAVEL (round 11): the oracle-gated form of the
+    generation-versioned layout.  Lifecycle: build(base 80%) ->
+    append(delta 20%, trips retrain_due) ->
     retrain_swap(full corpus) — then query the SAME index path at BOTH
     generations: ``generation=1`` pins the pre-retrain maintained index
     (frozen quantizer over base ∪ delta), ``generation=2`` the

@@ -307,7 +307,7 @@ def stream_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFr
 @register("stream_continuous_index_dedup", oracle=_MINHASH_STREAM_SQL)
 def stream_continuous_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS near-dup detection over the DURABLE generation/segment
-    index (round 12, late — AWAITING_FIRST_SLOT, an r13 driver slot):
+    index (round 12):
     where stream_dedup_minhash_incremental accumulates a scratch parquet
     index, this gate's foreachBatch handler
     (streaming/dedup.py:continuous_index_dedup) maintains the engine's
@@ -758,9 +758,7 @@ def _ivf_ingest_sql() -> str:
 
 @register("stream_continuous_ivf_ingest", oracle=_ivf_ingest_sql())
 def stream_continuous_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CONTINUOUS ANN-index INGEST (round 14 — the r13 verdict's item 5,
-    banked for its first r15 driver slot per the standing drain
-    contract): the vector-DB ingestion loop
+    """CONTINUOUS ANN-index INGEST (round 14): the vector-DB ingestion loop
     (streaming/dedup.py:continuous_ivf_ingest) streamed end to end —
     the first micro-batch bootstraps generation 1 (ivf_build; the
     coarse quantizer FREEZES at the bootstrap batch's sizing), every

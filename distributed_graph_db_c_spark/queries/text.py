@@ -1458,8 +1458,7 @@ TOKEN_BUDGET_PER_LANG = 2000
 
 @register("pipeline_token_budget_select", oracle=_token_budget_sql())
 def pipeline_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOKEN-BUDGET corpus selection (round 11, registered after the
-    window filled — AWAITING_FIRST_SLOT, an r12 driver slot): training
+    """TOKEN-BUDGET corpus selection (round 11): training
     mixtures are priced in tokens, so the curation step after scoring
     is "spend each language's token budget on its BEST documents" —
     per language, rank by the composite quality score (ties to the

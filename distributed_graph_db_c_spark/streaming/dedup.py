@@ -400,7 +400,7 @@ def continuous_embedding_dedup(
         cross = (
             decontaminate_incremental(
                 batch, table_prefix, id_col=id_col, vec_col=vec_col,
-                buckets_df=idx_buckets,
+                generation=gen, buckets_df=idx_buckets,
             )
             .filter(F.col("id_a") != F.col("id_b"))
             .select(

@@ -111,7 +111,9 @@ def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: 
     reads = [(r["seq"], r["op"], r["graph_id"], r["start"]) for r in rows if r["op"] in (3, 4)]
     if not reads:
         return
-    read_replies(catalog, reads).write.mode("append").parquet(results_path)
+    # one file per call: each op branch would otherwise append one file
+    # per scan partition, and every reply poll rescans them all
+    read_replies(catalog, reads).coalesce(1).write.mode("append").parquet(results_path)
 
 
 def request_dispatcher(catalog: GraphCatalog, results_path: str):

@@ -1,9 +1,9 @@
 """Pins for the minhash index's APPEND/RETRAIN lifecycle (round 12,
 late — the banked handoff candidate e): delta-sized segment appends,
 snapshot isolation by layout, the rebuild trigger, restart recovery and
-vacuum hygiene.  The driver gate is dedup_index_append (oracle-backed,
-AWAITING_FIRST_SLOT for r13); these pins state the operator-level
-contracts the gate's one corpus split cannot."""
+vacuum hygiene.  The registry gate is dedup_index_append (oracle-backed);
+these pins state the operator-level contracts the gate's one corpus
+split cannot."""
 
 from __future__ import annotations
 

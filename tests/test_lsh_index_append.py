@@ -1,9 +1,9 @@
 """Pins for the decontamination (LSH/embedding) index's APPEND/RETRAIN
 lifecycle (round 12, late): frozen-parameter segment appends, snapshot
 isolation, the sizing-basis retrain trigger, restart recovery.  The
-driver gate is dedup_decontaminate_append (oracle-backed,
-AWAITING_FIRST_SLOT for r13); these pins state the operator contracts
-on an adversarial planted corpus with a brute-force referee."""
+registry gate is dedup_decontaminate_append (oracle-backed); these pins
+state the operator contracts on an adversarial planted corpus with a
+brute-force referee."""
 
 from __future__ import annotations
 
@@ -266,3 +266,77 @@ def test_lsh_attach_recovers_segments_after_restart(spark):
         assert plan.count("SelectedBucketsCount") >= 4, plan[:1500]
     finally:
         _clean(spark, "lap_att")
+
+
+def test_lsh_append_refuses_buckets_of_another_width(spark):
+    """A shared ``buckets_df`` bucketed under another n_tables than the
+    index recorded is refused in the segment write: claim released, no
+    segment published, and a correct retry appends normally."""
+    from distributed_graph_db_c_spark.operators.bucketing import index_gen_prefix
+    from distributed_graph_db_c_spark.operators.similarity import with_lsh_buckets
+    from distributed_graph_db_c_spark.sinks import _hadoop_fs
+
+    corpus = _corpus(spark)
+    ev, base, delta = _split(corpus)
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    fs, jpath = _hadoop_fs(spark, warehouse)
+    _clean(spark, "lap_wid")
+    try:
+        gen = lsh_index_build(base, "lap_wid", threshold=THRESHOLD, dim=DIM, multiprobe=4)
+        meta = spark.table(f"{index_gen_prefix('lap_wid', gen)}_meta").head()
+        before = _pairs(decontaminate_incremental(ev, "lap_wid"))
+        wide = with_lsh_buckets(
+            delta, DIM, n_planes=int(meta["n_planes"]), n_tables=int(meta["n_tables"]) + 1
+        )
+        with pytest.raises(Exception, match="recorded n_tables"):
+            lsh_index_append(delta, "lap_wid", buckets_df=wide)
+        assert not fs.exists(jpath(_lsh_index_claim(warehouse, "lap_wid")))
+        assert index_segments(spark, "lap_wid", gen) == []
+        assert _pairs(decontaminate_incremental(ev, "lap_wid")) == before
+        assert lsh_index_append(delta, "lap_wid")["segment"] == 1
+    finally:
+        _clean(spark, "lap_wid")
+
+
+def test_continuous_embedding_dedup_screens_its_resolved_generation(
+    spark, tmp_path, monkeypatch
+):
+    """The embedding stream handler classifies a batch against the
+    generation it resolved; its screen must read that same generation
+    even when a rebuild publishes a newer one before the screen runs."""
+    from distributed_graph_db_c_spark.operators import similarity
+    from distributed_graph_db_c_spark.operators.similarity import N_PLANES
+    from distributed_graph_db_c_spark.streaming.dedup import (
+        EMB_PAIRS_DDL,
+        continuous_embedding_dedup,
+    )
+
+    corpus = _corpus(spark)
+    ev, base, delta = _split(corpus)
+    batch = ev.filter(F.col("vec_id") < 1010)  # planted matches 0, 3, .., 27: all in base
+    screen = similarity.decontaminate_incremental
+
+    def rebuild_then_screen(*args, **kwargs):
+        # a rebuild over a same-sized corpus (same plane sizing) that
+        # holds none of the batch's planted matches
+        assert lsh_index_build(
+            delta, "lap_gen", threshold=THRESHOLD, dim=DIM, multiprobe=N_PLANES
+        ) == 2
+        return screen(*args, **kwargs)
+
+    monkeypatch.setattr(similarity, "decontaminate_incremental", rebuild_then_screen)
+    pairs_dir = str(tmp_path / "pairs")
+    _clean(spark, "lap_gen")
+    try:
+        handler = continuous_embedding_dedup("lap_gen", pairs_dir, threshold=THRESHOLD, dim=DIM)
+        handler(base, 0)  # bootstraps generation 1
+        handler(batch, 1)
+        got = {
+            (r["id_b"], r["id_a"])
+            for r in spark.read.schema(EMB_PAIRS_DDL).parquet(pairs_dir).collect()
+            if r["id_b"] >= 1000 and r["id_a"] < 1000
+        }
+        want = {p for p in _brute_pairs(corpus, train_pred=lambda b: b < 30) if p[0] < 1010}
+        assert want and got == set(want)
+    finally:
+        _clean(spark, "lap_gen")

@@ -492,7 +492,7 @@ def test_rollup_partitioning_invariance(spark):
     assert results[0] == results[1]
 
 
-# -- IVF retrain-then-swap (registered via AWAITING_FIRST_SLOT) ----------------
+# -- IVF retrain-then-swap (registry gate sim_ivf_retrain_swap) ---------------
 
 
 def test_ivf_retrain_swap_equals_fresh_rebuild(spark):

@@ -457,6 +457,8 @@ def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path):
 
     results = str(tmp_path / "results")
     dispatch_requests(cat, spark.createDataFrame(rows, REQUEST_SCHEMA), results)
+    # one dispatch call appends one reply file, however many reads it holds
+    assert len(list((tmp_path / "results").glob("*.parquet"))) == 1
 
     got: dict[int, set] = {}
     for r in spark.read.schema(RESULT_SCHEMA).parquet(results).collect():
