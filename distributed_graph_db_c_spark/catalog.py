@@ -91,7 +91,6 @@ class GraphCatalog:
         # ``graphs``; set per write because a session not built by
         # ``session.get_spark`` may run Spark's default STATIC mode, which
         # would wipe every other graph.
-        self._invalidate_stats()
         (
             graphs.write.partitionBy("graph_id")
             .mode("overwrite")
@@ -106,19 +105,9 @@ class GraphCatalog:
         import os
         import shutil
 
-        self._invalidate_stats()
         part = f"{self.root}/graph_id={graph_id}"
         if os.path.exists(part):
             shutil.rmtree(part)
-
-    @staticmethod
-    def _invalidate_stats() -> None:
-        # Catalog mutations reuse the same scan path, so the traversal
-        # auto-dispatchers' memoized edge-count stat (keyed on the analyzed
-        # plan) would go stale without an explicit invalidation.
-        from .operators.traversal import clear_graph_stats_cache
-
-        clear_graph_stats_cache()
 
     # -- read path: graph rows, and edge and vertex views over them --
 

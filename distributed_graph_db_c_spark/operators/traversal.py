@@ -16,19 +16,26 @@ Reference semantics being re-expressed:
   vertices reachable from start with degree <= 1, excluding a non-isolated
   start vertex.  SQL-expressible, deterministic.
 
-Scale design: BFS is the textbook BSP/Pregel loop (GraphX, OSDI'14) as
-DataFrame ops — one equi-join + anti-join per superstep; the shuffle IS the
-synchronization barrier.  All graphs traverse simultaneously (keys are
-(graph_id, id)) so a catalog of millions of graphs is one job, and a single
-giant graph parallelizes across its edge partitions.  AQE broadcasts the
-frontier side automatically while it is small.  ``localCheckpoint`` every
-few supersteps truncates lineage so plans do not grow unboundedly — the
-standard iterative-algorithm-on-Spark pattern.
+Two kernel families, chosen by the caller (nothing counts edges to pick):
 
-Serving reads take neither path: ``bfs_graph_rows``/``dfs_leaves_graph_rows``
-traverse each request's stored graph row (the catalog bounds a graph to one
-row) with SQL higher-order-function expressions on that row — no
-supersteps, no shuffle, and no Python worker.
+- Graph-row kernels (``bfs_graph_rows``/``dfs_leaves_graph_rows``): each
+  start row carries its whole graph as one ``edges`` array — the serving
+  path joins requests to the catalog's stored rows, analytics callers fold
+  an edge frame with ``graph_rows`` (one ``groupBy``) — and the traversal
+  is SQL higher-order-function expressions on that row: no supersteps and
+  no Python worker.  The reference's regime: one loaded graph traversed
+  in-process (secondary_server.c:463-501).
+- Iterative superstep kernels (``bfs``, ``dfs_leaves``,
+  ``connected_components``, ``pagerank``, ``sssp``, ``kcore``): the
+  textbook BSP/Pregel loop (GraphX, OSDI'14) as DataFrame ops, one
+  equi-join + anti-join per superstep with the shuffle as the barrier,
+  for a graph too big for one row.  They are also the test references for
+  the in-task kernels.  ``localCheckpoint`` every few supersteps truncates
+  lineage.
+
+The ``*_fleet`` kernels (PageRank, CC, SSSP, k-core) still walk each
+graph in one pandas task; on large rows with arbitrary ids they need a
+position-indexed adjacency row before they can join the graph-row family.
 """
 
 from __future__ import annotations
@@ -315,51 +322,6 @@ def pagerank(
     return ranks
 
 
-def bfs_fleet(edges: DataFrame, starts: DataFrame) -> DataFrame:
-    """Fleet-mode BFS: cogrouped-pandas kernel for the MANY-TINY-GRAPHS
-    regime — the reference's actual operating point (a catalog of <=30-node
-    graphs, client.c:15, served one request per thread).
-
-    ``cogroup(edges, starts).applyInPandas`` hands each graph's edge list
-    and its start set to ONE task as Arrow batches; the whole traversal is
-    a dict walk in that task — zero supersteps, zero per-level job
-    overhead.  The iterative-join :func:`bfs` stays the path for a single
-    huge graph (its frontier parallelizes across the cluster; this kernel
-    requires each graph to fit in one task's memory).  Same canonical
-    semantics as :func:`bfs`: (graph_id, id, level), minimum hop count,
-    each reachable vertex once.
-    """
-
-    def run_bfs(edges_pdf: pd.DataFrame, starts_pdf: pd.DataFrame) -> pd.DataFrame:
-        if starts_pdf.empty:
-            return pd.DataFrame({"graph_id": [], "id": [], "level": []})
-        gid = int(starts_pdf["graph_id"].iloc[0])
-        adj: dict[int, list[int]] = {}
-        for s, d in zip(edges_pdf["src"], edges_pdf["dst"]):
-            adj.setdefault(int(s), []).append(int(d))
-        level = {int(v): 0 for v in starts_pdf["id"]}
-        frontier = list(level)
-        depth = 0
-        while frontier:
-            depth += 1
-            nxt = []
-            for v in frontier:
-                for nb in adj.get(v, ()):
-                    if nb not in level:
-                        level[nb] = depth
-                        nxt.append(nb)
-            frontier = nxt
-        return pd.DataFrame(
-            {"graph_id": gid, "id": list(level), "level": list(level.values())}
-        )
-
-    return (
-        edges.groupBy("graph_id")
-        .cogroup(starts.groupBy("graph_id"))
-        .applyInPandas(run_bfs, schema="graph_id int, id long, level long")
-    )
-
-
 # BFS over one graph row, as one SQL expression: each ``aggregate`` step
 # moves the frontier ``fr`` into the visited list ``vis`` (its level ``d``
 # into ``lvl``) and steps along every edge leaving it.  ``array_except``
@@ -397,123 +359,69 @@ _LEAVES = """IF(coalesce(exists(edges, e -> e.src = start), false),
     array_except(walk.vis, hubs))"""
 
 
-def _walk_graph_rows(rows: DataFrame) -> DataFrame:
+def graph_rows(edges: DataFrame, starts: DataFrame) -> DataFrame:
+    """The graph-row kernels' input built from an edge frame: each
+    ``(graph_id, id)`` start left-joined to its graph, folded into one
+    ``edges`` array by one ``groupBy(graph_id)`` as
+    ``GraphCatalog.put_all`` folds a stored row.  Returns ``(graph_id,
+    start, edges)``, ``edges`` NULL for a graph with no edge rows."""
+    rows = edges.groupBy("graph_id").agg(
+        F.collect_list(
+            F.struct(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
+        ).alias("edges")
+    )
+    return starts.select("graph_id", F.col("id").cast("long").alias("start")).join(
+        rows, on="graph_id", how="left"
+    )
+
+
+def _walk_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
     # a missing graph (NULL edges) is walked as an edgeless one
     no_edges = F.expr("CAST(array() AS array<struct<src:bigint,dst:bigint>>)")
     return rows.select(
-        "seq", "op", "graph_id", "start", F.coalesce("edges", no_edges).alias("edges")
+        *keys, "start", F.coalesce("edges", no_edges).alias("edges")
     ).withColumn("walk", F.expr(_BFS_WALK))
 
 
-def bfs_graph_rows(rows: DataFrame) -> DataFrame:
-    """Row-local BFS for request rows that carry their whole graph: the
-    serving kernel, Catalyst expressions on each row with no shuffle, no
-    supersteps and no Python worker (the reference's secondary server
-    loads one G-file and traverses it in-process,
-    secondary_server.c:463-501).
+def bfs_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Row-local BFS for start rows that carry their whole graph:
+    Catalyst expressions on each row with no shuffle, no supersteps and
+    no Python worker (the reference's secondary server loads one G-file
+    and traverses it in-process, secondary_server.c:463-501).
 
     Args:
-      rows: (seq, op, graph_id, start, edges) — requests left-joined to
-        their ``schemas.GRAPH_SCHEMA`` row; ``edges`` is NULL for a graph
-        that does not exist.
+      rows: ``keys`` + (start, edges) — requests left-joined to their
+        ``schemas.GRAPH_SCHEMA`` row, or :func:`graph_rows`; ``edges`` is
+        NULL for a graph that does not exist.
+      keys: the columns that identify a start row, passed through.
     Returns:
-      (seq, op, graph_id, id, level) — the same rows :func:`bfs` gives per
-      request, including ``(start, 0)`` for a missing graph or a start
-      outside the graph.  Requires each graph to fit in one row, which the
-      catalog's storage shape already bounds.
+      ``keys`` + (id, level) — the same rows :func:`bfs` gives per start,
+      including ``(start, 0)`` for a missing graph or a start outside the
+      graph.  Requires each graph to fit in one row, which the catalog's
+      storage shape already bounds.
     """
-    return _walk_graph_rows(rows).select(
-        "seq",
-        "op",
-        "graph_id",
+    return _walk_graph_rows(rows, keys).select(
+        *keys,
         F.inline(
             F.expr("zip_with(walk.vis, walk.lvl, (v, l) -> named_struct('id', v, 'level', l))")
         ),
     )
 
 
-def dfs_leaves_graph_rows(rows: DataFrame) -> DataFrame:
+def dfs_leaves_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
     """Row-local :func:`dfs_leaves` over the same input as
     :func:`bfs_graph_rows`; ``level`` is NULL.  A graph with no leaf
     reachable from the start (a triangle) yields no row."""
     return (
-        _walk_graph_rows(rows)
+        _walk_graph_rows(rows, keys)
         .withColumn("sorted", F.array_sort("edges"))
         .withColumn("hubs", F.expr(_HUBS))
         .select(
-            "seq",
-            "op",
-            "graph_id",
+            *keys,
             F.explode(F.expr(_LEAVES)).alias("id"),
             F.lit(None).cast("long").alias("level"),
         )
     )
-
-
-# Per-graph edge count below which the cogrouped kernel wins: the whole
-# graph must fit one task comfortably ((long,long,long) rows; 5M edges is
-# ~120 MB raw, well under an executor slot) AND beat superstep scheduling
-# overhead (~0.2 s/level in local mode, far more on a busy cluster).
-_FLEET_MAX_EDGES = 5_000_000
-
-
-# Dispatch-stat memo: (applicationId, semanticHash of the analyzed edge
-# plan) -> max per-graph edge count.  BFS/PageRank/CC auto-dispatchers all
-# consult the same scalar over the same catalog snapshot; without the memo
-# every dispatch pays a counting job (3+ per suite run, one per traversal
-# at a 100x catalog).  Semantic hashing keys on the PLAN, so a different
-# sf_dir (different scan path) misses correctly; catalog MUTATIONS reuse
-# the same path, so GraphCatalog.put/put_all/drop invalidate explicitly.
-_EDGE_STAT_CACHE: dict[tuple[str, int], int] = {}
-
-
-def clear_graph_stats_cache() -> None:
-    """Invalidate memoized dispatch stats (called by catalog mutators)."""
-    _EDGE_STAT_CACHE.clear()
-
-
-def max_graph_edges(edges: DataFrame, use_cache: bool = True) -> int:
-    """Max per-graph edge count — the ONE scalar the auto-dispatchers need.
-    Memoized per (session, analyzed plan): repeated traversals over the
-    same catalog snapshot pay the aggregate job once.  Callers can still
-    pass ``max_edges`` to ``*_auto`` to skip the job entirely, or
-    ``use_cache=False`` to force a recount."""
-    key: tuple[str, int] | None
-    try:
-        key = (
-            edges.sparkSession.sparkContext.applicationId,
-            edges._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # Connect or API drift: fall back to uncached
-        key = None
-    if use_cache and key is not None and key in _EDGE_STAT_CACHE:
-        return _EDGE_STAT_CACHE[key]
-    row = edges.groupBy("graph_id").count().agg(F.max("count").alias("m")).collect()[0]
-    val = 0 if row["m"] is None else int(row["m"])
-    if key is not None:
-        _EDGE_STAT_CACHE[key] = val
-    return val
-
-
-def bfs_auto(edges: DataFrame, starts: DataFrame, max_edges: int | None = None) -> DataFrame:
-    """Kernel dispatch: ONE aggregate decides the physical strategy.
-
-    - every graph small (max per-graph edge count <= _FLEET_MAX_EDGES):
-      cogrouped-pandas :func:`bfs_fleet` — whole graph per task, zero
-      supersteps.  The reference's entire catalog (20 graphs x <=30 nodes)
-      lives here.
-    - any giant graph: iterative-join :func:`bfs` — the frontier
-      parallelizes across the cluster; depth x per-superstep jobs is the
-      price of not fitting one task.
-
-    The two kernels implement identical canonical semantics (property test
-    pins them); dispatch changes only the physical plan, exactly like
-    Catalyst choosing broadcast vs sort-merge.
-    """
-    biggest = max_graph_edges(edges) if max_edges is None else max_edges
-    if biggest <= _FLEET_MAX_EDGES:
-        return bfs_fleet(edges, starts)
-    return bfs(edges, starts)
 
 
 def pagerank_fleet(
@@ -523,7 +431,8 @@ def pagerank_fleet(
     scale: int = 10**12,
 ) -> DataFrame:
     """Fleet-mode PageRank: the cogrouped in-task twin of :func:`pagerank`
-    for many small graphs (same regime argument as :func:`bfs_fleet`).
+    for many small graphs: each graph's edge list and vertex set reach ONE
+    task as Arrow batches, so the loop runs with no supersteps.
     The integer fixed-point recurrence is replayed verbatim with Python
     ints (arbitrary precision, same floor division), so results are
     BIT-IDENTICAL to the iterative-join kernel — pinned by the
@@ -558,22 +467,6 @@ def pagerank_fleet(
         .cogroup(vertices.groupBy("graph_id"))
         .applyInPandas(run_pr, schema="graph_id int, id long, rank_scaled long")
     )
-
-
-def pagerank_auto(
-    edges: DataFrame,
-    vertices: DataFrame,
-    iterations: int = 10,
-    scale: int = 10**12,
-    max_edges: int | None = None,
-) -> DataFrame:
-    """Kernel dispatch for PageRank, same decision rule as :func:`bfs_auto`:
-    all graphs small -> cogrouped in-task kernel; any giant graph -> the
-    iterative-join BSP kernel."""
-    biggest = max_graph_edges(edges) if max_edges is None else max_edges
-    if biggest <= _FLEET_MAX_EDGES:
-        return pagerank_fleet(edges, vertices, iterations, scale)
-    return pagerank(edges, vertices, iterations, scale)
 
 
 def connected_components_fleet(edges: DataFrame, vertices: DataFrame) -> DataFrame:
@@ -614,19 +507,6 @@ def connected_components_fleet(edges: DataFrame, vertices: DataFrame) -> DataFra
         .cogroup(vertices.groupBy("graph_id"))
         .applyInPandas(run_cc, schema="graph_id int, id long, component long")
     )
-
-
-def connected_components_auto(
-    edges: DataFrame,
-    vertices: DataFrame,
-    max_iters: int = 50,
-    max_edges: int | None = None,
-) -> DataFrame:
-    """Kernel dispatch for CC, same rule as :func:`bfs_auto`."""
-    biggest = max_graph_edges(edges) if max_edges is None else max_edges
-    if biggest <= _FLEET_MAX_EDGES:
-        return connected_components_fleet(edges, vertices)
-    return connected_components(edges, vertices, max_iters)
 
 
 def sssp(
@@ -707,8 +587,8 @@ def sssp(
 
 def sssp_fleet(edges: DataFrame, starts: DataFrame) -> DataFrame:
     """Fleet-mode SSSP: per-graph Dijkstra (binary heap) in a cogrouped
-    Arrow task — the many-tiny-graphs twin of :func:`sssp`, same regime
-    argument as :func:`bfs_fleet`.  Python ints, so distances are exact
+    Arrow task — the many-tiny-graphs twin of :func:`sssp`, with no
+    supersteps.  Python ints, so distances are exact
     and BIT-IDENTICAL to the iterative kernel (kernel-agreement property
     test)."""
     import heapq
@@ -742,16 +622,6 @@ def sssp_fleet(edges: DataFrame, starts: DataFrame) -> DataFrame:
     )
 
 
-def sssp_auto(
-    edges: DataFrame, starts: DataFrame, max_edges: int | None = None
-) -> DataFrame:
-    """Kernel dispatch for SSSP, same rule as :func:`bfs_auto`."""
-    biggest = max_graph_edges(edges) if max_edges is None else max_edges
-    if biggest <= _FLEET_MAX_EDGES:
-        return sssp_fleet(edges, starts)
-    return sssp(edges, starts)
-
-
 def toposort_levels(
     edges: DataFrame,
     max_iter: int = 1000,
@@ -766,7 +636,7 @@ def toposort_levels(
     Edges are DIRECTED (src -> dst) and must form a DAG; an accidental
     cycle raises instead of spinning.
 
-    Two kernels, dispatched by in-degree (the ``bfs_auto`` pattern):
+    Two kernels, dispatched by in-degree:
 
     - max in-degree <= 1 (a forest of chains/trees — CDC lineage chains,
       the order-chain fixture): POINTER DOUBLING — every vertex keeps
@@ -1030,7 +900,7 @@ def forest_roots(
 def kcore(
     edges: DataFrame,
     k: int,
-    max_iter: int = 50,
+    max_iter: int | None = None,
 ) -> DataFrame:
     """K-CORE decomposition by iterative peeling: repeatedly drop
     vertices with degree < k until the fixpoint; return the surviving
@@ -1050,6 +920,13 @@ def kcore(
     holds, so equal counts imply the fixpoint — one cheap action per
     round instead of a subtract.
 
+    ``max_iter`` None derives the round cap from the alive count taken
+    before the first round: each round removes at least one vertex or
+    reaches the fixpoint, so ``n_alive + 1`` rounds never fire before
+    convergence (a deep-peeling path graph converges instead of dying on
+    a fixed cap).  50 stays the floor, so a tiny graph keeps a loud
+    runaway-bug detector.
+
     No reference citation: the reference's graph surface is 4 traversal
     ops (SURVEY.md §2.1); k-core is driver-mandated extension surface
     (graph analytics beyond parity, §2.3)."""
@@ -1057,6 +934,8 @@ def kcore(
         eager=True
     )
     n_alive = alive.count()
+    if max_iter is None:
+        max_iter = max(50, n_alive + 1)
     for _ in range(max_iter):
         sub = edges.join(alive.select(F.col("id").alias("u")), "u", "left_semi").join(
             alive.select(F.col("id").alias("v")), "v", "left_semi"
@@ -1081,8 +960,8 @@ def kcore_fleet(edges: DataFrame, k: int) -> DataFrame:
     nothing.  The iterative :func:`kcore` pays ~1 s of job overhead per
     peeling round; on graphs that fit one task (the co-purchase graph at
     sf0.1 peels ~15 rounds) this kernel is an order of magnitude faster
-    — the same regime argument as :func:`bfs_fleet`.  Requires the edge
-    list to fit one task's memory; :func:`kcore_auto` dispatches."""
+    — whole graph in one task, no supersteps.  Requires the edge list to
+    fit one task's memory; the co-purchase query calls it directly."""
 
     def peel(pdf: pd.DataFrame) -> pd.DataFrame:
         adj: dict[int, list[int]] = {}
@@ -1114,42 +993,6 @@ def kcore_fleet(edges: DataFrame, k: int) -> DataFrame:
     )
 
 
-def kcore_auto(
-    edges: DataFrame,
-    k: int,
-    fleet_max_edges: int = 2_000_000,
-    max_iter: int | None = None,
-) -> DataFrame:
-    """Kernel dispatch for k-core, mirroring :func:`bfs_auto`: an edge
-    count (one cheap action) picks in-task bucket peeling for graphs
-    that fit one task, else the distributed per-round loop.  Identical
-    semantics either way (kernel-agreement pytest); only the physical
-    strategy changes — peel depth is free in-task, while the iterative
-    kernel parallelizes each round across the cluster for graphs that
-    don't fit.
-
-    ``max_iter`` threads through to the distributed :func:`kcore` loop
-    (ADVICE r6: the hardcoded 50-round cap made deep-peeling
-    path/tendril-shaped graphs above ``fleet_max_edges`` raise instead
-    of converge).  When None the cap derives from the graph itself:
-    each peeling round removes at least one vertex or reaches the
-    fixpoint, so rounds are bounded by the vertex count, itself bounded
-    by the (already counted) directed edge count + isolated-free
-    construction — ``n_edges + 1`` rounds can never fire before
-    convergence.  50 stays the floor so tiny graphs keep a loud
-    runaway-bug detector rather than a vacuous one.
-
-    The edge list is localCheckpoint-materialized BEFORE the dispatch
-    count: edge derivation is often the expensive half (the co-purchase
-    gate's self-join), and counting a lazy plan then handing the same
-    plan to the kernel would compute it twice."""
-    edges = edges.localCheckpoint(eager=True)
-    n_edges = edges.count()
-    if n_edges <= fleet_max_edges:
-        return kcore_fleet(edges, k)
-    return kcore(edges, k, max_iter=max_iter or max(50, n_edges + 1))
-
-
 def pairs_to_canonical(
     pairs: DataFrame,
     ids: DataFrame,
@@ -1177,5 +1020,5 @@ def pairs_to_canonical(
     vertices = ids.select(
         F.lit(0).alias("graph_id"), F.col(id_col).cast("long").alias("id")
     )
-    cc = connected_components_auto(edges, vertices)
+    cc = connected_components_fleet(edges, vertices)
     return cc.select(F.col("id").alias(id_col), F.col("component").alias("canonical_id"))

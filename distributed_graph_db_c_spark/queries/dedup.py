@@ -746,8 +746,8 @@ def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side composes two scale paths already gated separately: the
     MinHash+LSH near-dup pair join (one slim shuffle, bucketed candidates)
     feeds min-label connected components over the pair graph (the
-    cogrouped union-find kernel via auto dispatch — near-dup clusters are
-    tiny by construction even when the corpus is not).  The oracle
+    cogrouped in-task union-find kernel — near-dup clusters are tiny by
+    construction even when the corpus is not).  The oracle
     recomputes the same fixpoint as a recursive CTE over the exact-Jaccard
     pair graph; both reduce to min-reachable-id, so the mapping is
     hash-exact while LSH recall stays total (see dedup_minhash_pairs'
@@ -901,8 +901,8 @@ def dedup_embedding_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs->clusters->survivor story for BOTH text and vector
     near-duplicate modes.  Composes two separately-gated scale paths:
     the LSH-bucketed cosine pair join feeds min-label connected
-    components (cogrouped union-find via auto dispatch; near-dup
-    clusters stay tiny even when the corpus is not).
+    components (cogrouped in-task union-find; near-dup clusters stay
+    tiny even when the corpus is not).
 
     CORPUS-CONTINGENT ORACLE: exact while multiprobe candidate recall
     at 0.45 is total on this corpus — the same contract (and the same

@@ -10,9 +10,11 @@ tables, so the graphs here are derived deterministically from those tables
 - nation graph: nations in the same region form a clique (5 components of
   ~5 — good CC fixture).
 
-Scale: identical code paths to the golden-fixture traversals; edge
-derivation is a window + self-union (one shuffle by customer), BFS is the
-iterative-join kernel from operators.traversal.
+Scale: edge derivation is a window + self-union (one shuffle by
+customer).  BFS and DFS leaves fold the edges into graph rows with one
+``groupBy(graph_id)`` and walk them with the serving path's graph-row
+kernels; CC, PageRank, SSSP and k-core call their in-task pandas kernels.
+Each query calls its kernel directly: nothing counts edges to choose one.
 """
 
 from __future__ import annotations
@@ -21,13 +23,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..operators.traversal import (
-    bfs,
-    bfs_auto,
-    connected_components,
-    connected_components_auto,
+    bfs_graph_rows,
+    connected_components_fleet,
     degrees,
-    dfs_leaves,
+    dfs_leaves_graph_rows,
     dfs_preorder,
+    graph_rows,
 )
 from ..registry import register
 from ..sources.tables import load_table
@@ -109,11 +110,9 @@ def graph_bfs_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit(0).alias("graph_id"), "id")
     )
     edges = order_chain_edges(spark, sf_dir)
-    # bfs_auto: the chain graph is small at every test SF, so dispatch
-    # picks the cogrouped fleet kernel; at 100 TB the same call routes a
-    # giant graph to the iterative-join kernel (kernel-agreement pinned in
-    # tests/test_properties.py)
-    return bfs_auto(edges, start).select(F.col("id"), F.col("level").cast("long").alias("level"))
+    # the whole order-chain graph is one row (270k edges at sf0.1); the
+    # kernel agrees with the iterative bfs, pinned in tests/test_properties.py
+    return bfs_graph_rows(graph_rows(edges, start), ["graph_id"]).select("id", "level")
 
 
 _DFS_LEAVES_SQL = f"""
@@ -147,7 +146,7 @@ def graph_dfs_leaves_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit(0).alias("graph_id"), "id")
     )
     edges = order_chain_edges(spark, sf_dir)
-    return dfs_leaves(edges, start).select("id")
+    return dfs_leaves_graph_rows(graph_rows(edges, start), ["graph_id"]).select("id")
 
 
 # Customer 1's chain is a path, but the start (MIN o_orderkey) can sit
@@ -226,8 +225,8 @@ def graph_connected_components_nations(spark: SparkSession, sf_dir: str) -> Data
         F.lit(0).alias("graph_id"), F.col("n_nationkey").cast("long").alias("id")
     )
     edges = nation_edges(spark, sf_dir)
-    # auto dispatch (see bfs_auto): tiny graph -> in-task union-find
-    return connected_components_auto(edges, vertices).select(
+    # in-task union-find: the nation graph is one tiny graph
+    return connected_components_fleet(edges, vertices).select(
         F.col("id"), F.col("component").cast("long").alias("component")
     )
 
@@ -321,21 +320,20 @@ base AS (SELECT n_nationkey AS id, (SELECT COUNT(*) FROM nation) AS n_g FROM nat
 def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, 10 iterations, integer fixed-point — see
     operators.traversal.pagerank) over the same-region nation graph."""
-    from ..operators.traversal import pagerank_auto
+    from ..operators.traversal import pagerank_fleet
 
     nation = load_table(spark, sf_dir, "nation")
     vertices = nation.select(
         F.lit(0).alias("graph_id"), F.col("n_nationkey").cast("long").alias("id")
     )
     edges = nation_edges(spark, sf_dir)
-    # auto dispatch: the nation graph is tiny, so the cogrouped in-task
-    # kernel runs; a 100 TB edge list routes to the iterative BSP kernel
-    return pagerank_auto(edges, vertices).select("id", "rank_scaled")
+    # in-task kernel, bit-identical to the iterative pagerank (property test)
+    return pagerank_fleet(edges, vertices).select("id", "rank_scaled")
 
 
 # ---------------------------------------------------------------------------
-# Fleet BFS (cogrouped-pandas kernel): 5 per-region nation chains traversed
-# simultaneously, one graph per Arrow cogroup.
+# Fleet BFS: 5 per-region nation chains traversed simultaneously, one graph
+# row per region.
 # ---------------------------------------------------------------------------
 
 _FLEET_SQL = """
@@ -349,15 +347,13 @@ FROM nation
 
 @register("graph_bfs_fleet_regions", oracle=_FLEET_SQL)
 def graph_bfs_fleet_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bfs_fleet (cogrouped-pandas) over a fleet of 5 chain graphs — one
-    per region, nations chained in key order, start = each region's lowest
-    nation.  On a chain from the minimum, BFS level == rank-1, which gives
-    the oracle WITHOUT recursion.  This is the reference's many-tiny-graphs
-    regime (catalog of <=30-node graphs, client.c:15): whole-graph
-    traversal in one task beats superstep joins by orders of magnitude at
-    that size."""
-    from ..operators.traversal import bfs_fleet
-
+    """Graph-row BFS over a fleet of 5 chain graphs — one per region,
+    nations chained in key order, start = each region's lowest nation.
+    On a chain from the minimum, BFS level == rank-1, which gives the
+    oracle WITHOUT recursion.  This is the reference's many-tiny-graphs
+    regime (catalog of <=30-node graphs, client.c:15): each graph folds
+    into one row and is walked by the serving path's BFS expression, with
+    no supersteps."""
     nation = load_table(spark, sf_dir, "nation")
     w = Window.partitionBy("n_regionkey").orderBy("n_nationkey")
     chain = (
@@ -375,7 +371,7 @@ def graph_bfs_fleet_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
         nation.groupBy(F.col("n_regionkey").cast("int").alias("graph_id"))
         .agg(F.min("n_nationkey").cast("long").alias("id"))
     )
-    return bfs_fleet(edges, starts)
+    return bfs_graph_rows(graph_rows(edges, starts), ["graph_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -412,10 +408,9 @@ def graph_sssp_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN o_orderkey) can sit MID-chain, so the traversal genuinely relaxes
     in both directions; on a path graph the true distance is the
     |cumulative-gap difference|, which is what the window-sum oracle
-    computes.  auto dispatch: tiny chain -> in-task Dijkstra; a 100 TB
-    edge list -> the frontier-relaxation BSP kernel (kernel agreement
-    property-pinned)."""
-    from ..operators.traversal import sssp_auto
+    computes.  In-task Dijkstra (:func:`sssp_fleet`); the
+    frontier-relaxation :func:`sssp` is its property-test reference."""
+    from ..operators.traversal import sssp_fleet
 
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -437,7 +432,7 @@ def graph_sssp_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("o_orderkey").alias("id"))
         .select(F.lit(0).alias("graph_id"), "id")
     )
-    return sssp_auto(edges, start).select("id", "dist")
+    return sssp_fleet(edges, start).select("id", "dist")
 
 
 # Directed (unsymmetrized) order chains: a forest of per-customer paths —
@@ -622,11 +617,10 @@ def graph_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 6 (measured: 4 at sf0.01; extra rounds are idempotent).
     The operator itself runs to the true fixpoint at any scale; the
     pytest differential against a reference peeler covers graphs the
-    unrolled oracle can't.  Physical strategy via kcore_auto: this
-    graph fits one task, so the linear-time in-task bucket peel runs
-    (peel depth free — the sf0.1 graph needs ~15 rounds, 16 s -> ~3 s);
-    the distributed per-round loop remains the over-threshold path."""
-    from ..operators.traversal import kcore_auto as kcore
+    unrolled oracle can't.  The graph fits one task (7,706 edges at
+    sf0.1), so the linear-time in-task bucket peel runs: peel depth is
+    free (the sf0.1 graph needs ~15 rounds of the per-round loop)."""
+    from ..operators.traversal import kcore_fleet
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pairs = (
@@ -646,6 +640,6 @@ def graph_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = pairs.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
         pairs.select(F.col("dst").alias("u"), F.col("src").alias("v"))
     )
-    return kcore(und, k=2).select(
+    return kcore_fleet(und, k=2).select(
         F.col("id").alias("part_id"), "core_degree"
     )

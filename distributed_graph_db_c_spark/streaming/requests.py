@@ -74,8 +74,10 @@ REQUEST_SCHEMA = StructType(
 
 RESULT_SCHEMA = "seq long, op int, graph_id int, id long, level long"
 
-# One read request as the kernels take it, before the join to its graph row.
-READ_SCHEMA = StructType([REQUEST_SCHEMA[c] for c in ("seq", "op", "graph_id", "start")])
+# One read request as the kernels take it, before the join to its graph row;
+# the kernels pass its key columns through to the reply.
+READ_KEYS = ["seq", "op", "graph_id"]
+READ_SCHEMA = StructType([REQUEST_SCHEMA[c] for c in READ_KEYS + ["start"]])
 
 
 def read_replies(catalog: GraphCatalog, reads: list[tuple]) -> DataFrame:
@@ -88,7 +90,7 @@ def read_replies(catalog: GraphCatalog, reads: list[tuple]) -> DataFrame:
         catalog.graphs({r[2] for r in reads}).select("graph_id", "edges"), on="graph_id", how="left"
     )
     replies = [
-        kernel(with_graph.filter(F.col("op") == op))
+        kernel(with_graph.filter(F.col("op") == op), READ_KEYS)
         for op, kernel in ((4, bfs), (3, dfs_leaves))
         if any(r[1] == op for r in reads)
     ]

@@ -19,8 +19,11 @@ import pyspark.sql.functions as F
 
 from distributed_graph_db_c_spark.operators.traversal import (
     bfs,
+    bfs_graph_rows,
     connected_components,
     dfs_leaves,
+    dfs_leaves_graph_rows,
+    graph_rows,
 )
 from distributed_graph_db_c_spark.schemas import GRAPH_EDGES_SCHEMA, GRAPH_VERTICES_SCHEMA
 
@@ -104,24 +107,33 @@ def _fleet_dfs(spark, fleet):
 
 
 def test_bfs_levels_and_reachability_random_fleet(spark):
+    """Both BFS kernels, the iterative superstep one and the graph-row
+    one over the folded edges, against the Python reference."""
     fleet = _random_fleet()
     edges_df, _, starts_df = _fleet_dfs(spark, fleet)
-    got = {
-        (r["graph_id"], r["id"]): r["level"]
-        for r in bfs(edges_df, starts_df).collect()
-    }
     want = {
         (gid, v): lvl
         for gid, n, edges, start in fleet
         for v, lvl in _py_bfs(n, edges, start).items()
     }
-    assert got == want
+    rows = graph_rows(edges_df, starts_df)
+    for name, out in (
+        ("iterative", bfs(edges_df, starts_df)),
+        ("graph rows", bfs_graph_rows(rows, ["graph_id"])),
+    ):
+        got = [((r["graph_id"], r["id"]), r["level"]) for r in out.collect()]
+        assert len(got) == len(want), name  # each reached vertex once
+        assert dict(got) == want, name
 
 
 def test_dfs_leaves_random_fleet(spark):
     fleet = _random_fleet()
     edges_df, _, starts_df = _fleet_dfs(spark, fleet)
-    got = {(r["graph_id"], r["id"]) for r in dfs_leaves(edges_df, starts_df).collect()}
+    rows = graph_rows(edges_df, starts_df)
+    got_iter = [(r["graph_id"], r["id"]) for r in dfs_leaves(edges_df, starts_df).collect()]
+    got_rows = [
+        (r["graph_id"], r["id"]) for r in dfs_leaves_graph_rows(rows, ["graph_id"]).collect()
+    ]
     want = set()
     for gid, n, edges, start in fleet:
         adj = _adj(n, edges)
@@ -130,7 +142,9 @@ def test_dfs_leaves_random_fleet(spark):
             deg = len(adj[v])
             if deg <= 1 and not (v == start and deg >= 1):
                 want.add((gid, v))
-    assert got == want
+    for name, got in (("iterative", got_iter), ("graph rows", got_rows)):
+        assert len(got) == len(want), name  # each leaf once
+        assert set(got) == want, name
 
 
 def test_connected_components_random_fleet(spark):
@@ -146,24 +160,6 @@ def test_connected_components_random_fleet(spark):
         for v, c in _py_components(n, edges).items()
     }
     assert got == want
-
-def test_bfs_fleet_kernel_agrees_with_iterative_kernel(spark):
-    """The cogrouped-pandas fleet kernel and the iterative-join kernel are
-    two physical strategies for ONE semantics — identical (graph, vertex,
-    level) sets on a random fleet."""
-    from distributed_graph_db_c_spark.operators.traversal import bfs_fleet
-
-    fleet = _random_fleet()
-    edges_df, _, starts_df = _fleet_dfs(spark, fleet)
-    got_fleet = {
-        (r["graph_id"], r["id"]): r["level"]
-        for r in bfs_fleet(edges_df, starts_df).collect()
-    }
-    got_iter = {
-        (r["graph_id"], r["id"]): r["level"]
-        for r in bfs(edges_df, starts_df).collect()
-    }
-    assert got_fleet == got_iter
 
 
 def test_pagerank_fleet_kernel_bit_identical_to_iterative(spark):

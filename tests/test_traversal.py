@@ -122,33 +122,6 @@ def test_connected_components(spark, fixture_graphs):
     assert g1 == {1}
 
 
-def test_max_graph_edges_memo_and_catalog_invalidation(spark, tmp_path):
-    """The dispatch stat is memoized per (session, analyzed plan): a second
-    call over an equivalent plan must hit the cache; a catalog mutation
-    (same scan path, new data) must invalidate it, not serve stale counts."""
-    from distributed_graph_db_c_spark.catalog import GraphCatalog
-    from distributed_graph_db_c_spark.operators.traversal import (
-        _EDGE_STAT_CACHE,
-        clear_graph_stats_cache,
-        max_graph_edges,
-    )
-
-    clear_graph_stats_cache()
-    cat = GraphCatalog(spark, str(tmp_path / "memo_cat"))
-    cat.put(1, [1, 2, 3], [(1, 2), (2, 3)])
-    assert len(_EDGE_STAT_CACHE) == 0  # put() invalidates, never populates
-
-    assert max_graph_edges(cat.edges()) == 2
-    assert len(_EDGE_STAT_CACHE) == 1
-    assert max_graph_edges(cat.edges()) == 2  # equivalent plan -> memo hit
-    assert len(_EDGE_STAT_CACHE) == 1
-
-    cat.put(1, [1, 2, 3, 4], [(1, 2), (2, 3), (3, 4)])  # same path, new data -> cache cleared
-    assert len(_EDGE_STAT_CACHE) == 0
-    assert max_graph_edges(cat.edges()) == 3
-    clear_graph_stats_cache()
-
-
 def test_toposort_levels_diamond_vs_bfs(spark):
     """Reconverging diamond + tail: 1->2->4->5 and 1->3->4; BFS gives
     node 4 level 2 either way, but TOPO level must be the LONGEST path
@@ -372,28 +345,23 @@ def test_kcore_matches_reference_peeler(spark):
 
 
 def test_kcore_auto_threads_max_iter_to_distributed_path(spark):
-    """ADVICE r6: a deep-peeling chain above fleet_max_edges must
-    CONVERGE through the distributed kcore loop, not die on the
-    hardcoded 50-round cap.  A 120-vertex path graph peels ~60 rounds
-    at k=2 (both endpoints shed each round); forcing the distributed
-    kernel with fleet_max_edges=0 and the derived cap must return the
-    correct (empty — a path has no 2-core) result instead of raising."""
-    import pyspark.sql.functions as F
-
-    from distributed_graph_db_c_spark.operators.traversal import kcore_auto
+    """ADVICE r6: a deep-peeling chain must CONVERGE through the
+    distributed kcore loop, not die on a fixed 50-round cap.  A
+    120-vertex path graph peels ~60 rounds at k=2 (both endpoints shed
+    each round); with no ``max_iter`` the cap derives from the alive
+    count, so kcore must return the correct (empty — a path has no
+    2-core) result instead of raising."""
+    from distributed_graph_db_c_spark.operators.traversal import kcore
 
     n = 120
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "u long, v long"
     )
     und = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    out = kcore_auto(und, k=2, fleet_max_edges=0).collect()
-    assert out == []  # a path graph has no 2-core
-    # explicit max_iter still forwards (and a too-small one still raises loudly)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="no fixpoint"):
-        kcore_auto(und, k=2, fleet_max_edges=0, max_iter=3)
+    assert kcore(und, k=2).collect() == []  # a path graph has no 2-core
+    # an explicit max_iter still applies (and a too-small one raises loudly)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        kcore(und, k=2, max_iter=3)
 
 
 def test_rel_array_hof_null_quantities_match_oracle_semantics(spark):

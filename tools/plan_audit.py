@@ -25,6 +25,9 @@ from distributed_graph_db_c_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.01"
 
+# plan nodes that ship rows to a Python worker
+_PYTHON_NODES = r"FlatMapCoGroupsInPandas|MapInPandas|ArrowEvalPython|BatchEvalPython"
+
 # query -> list of (label, regex expected in formatted plan, must_match)
 EXPECTATIONS: dict[str, list[tuple[str, str, bool]]] = {
     "rel_q6_forecast_revenue": [
@@ -227,6 +230,20 @@ EXPECTATIONS: dict[str, list[tuple[str, str, bool]]] = {
         ("partial agg", r"partial_", True),
         ("column pruning", r"ReadSchema: [^\n]*lang", True),
         ("no id column read", r"ReadSchema: [^\n]*doc_id", False),
+    ],
+    # BFS and DFS leaves fold the edges into graph rows and walk them with
+    # Catalyst expressions: no Python worker, no superstep checkpoints
+    "graph_bfs_order_chain": [
+        ("no python kernel", _PYTHON_NODES, False),
+        ("no superstep checkpoint", r"ExistingRDD", False),
+    ],
+    "graph_bfs_fleet_regions": [
+        ("no python kernel", _PYTHON_NODES, False),
+        ("no superstep checkpoint", r"ExistingRDD", False),
+    ],
+    "graph_dfs_leaves_order_chain": [
+        ("no python kernel", _PYTHON_NODES, False),
+        ("no superstep checkpoint", r"ExistingRDD", False),
     ],
     "graph_dfs_preorder": [
         # the sequential per-graph kernel is ONE grouped-map pandas stage
@@ -591,9 +608,9 @@ EXPECTATIONS: dict[str, list[tuple[str, str, bool]]] = {
         ("no nested loop", r"BroadcastNestedLoopJoin|CartesianProduct", False),
         ("no python udf", r"BatchEvalPython", False),
     ],
-    # (dedup_embedding_groups_grade: min-label CC tail returns through
-    # localCheckpoint/auto-dispatch like dedup_embedding_groups — plan
-    # pinned in tests/test_dedup_similarity.py, not greppable here.)
+    # (dedup_embedding_groups_grade: its candidate pairs return through
+    # localCheckpoint before the min-label CC tail — plan pinned in
+    # tests/test_dedup_similarity.py, not greppable here.)
     "text_bm25_topk": [
         # query-term filter reaches the scan region (explode feeds only
         # matching tokens to the tf shuffle); scoring is pure integer
