@@ -9,8 +9,16 @@ crash never leaves a torn graph, and an edgeless graph is ``edges = []``
 by construction.  Deliberate bound: a graph must fit in one row, which is
 what lets the serving kernels (``operators.traversal.bfs_graph_rows`` /
 ``dfs_leaves_graph_rows``) traverse each request's graph row with SQL
-expressions evaluated on that row.  ``put`` builds its one-row frame from
-an Arrow table, so a write runs one single-task job and no Python worker.
+expressions evaluated on that row.  ``put`` writes a whole micro-batch's
+graphs as one frame built from an Arrow table, so the writes of a batch
+run one job and no Python worker.  ``stored_edges`` hands a read its graph
+row straight from the partition's data files on the driver, with no Spark
+job; it reads the files on every call, so a write by another process (or
+another catalog object on the same root) is seen by the next read, and
+there is no cache to invalidate.
+
+The root is a local filesystem path: ``stored_edges`` lists and reads the
+partition directories, and ``drop`` deletes them, with ``os``.
 
 Reference parity (SURVEY.md §2.1 ops 1/2):
 - op 1 "add graph"    (primary_server.c:45-157): create-or-overwrite one
@@ -19,9 +27,11 @@ Reference parity (SURVEY.md §2.1 ops 1/2):
   truncate at :65): byte-identical to op 1 — full replace, never a merge.
   So ``put`` IS both ops; no upsert logic exists by design.
 - readers-writers isolation (primary_server.c:60,150; secondary_server.c:
-  229-234,297-303): free here — parquet snapshot reads over immutable
-  files; a reader that already listed its files never sees a concurrent
-  overwrite (upgrade path for true ACID: Delta/Iceberg table format).
+  229-234,297-303): a graph is never torn — its row is one file written
+  in one job commit — but the commit replaces the partition directory,
+  so a read of that graph at that instant can find it missing or lose a
+  file it listed (an error, as in a Spark scan); no lock orders them
+  (upgrade path for true ACID: Delta/Iceberg table format).
 
 Scale posture: a query on one graph prunes to one partition directory
 (partition pruning is visible in the scan's PartitionFilters), and a
@@ -32,8 +42,12 @@ client.c:15); ours is unbounded in the number of graphs.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,14 +61,18 @@ class GraphCatalog:
 
     # -- write path (reference ops 1 and 2 — "modify" is a full replace) --
 
-    def put(self, graph_id: int, vertices: list[int], edges: list[tuple[int, int]]) -> None:
-        """Create-or-overwrite one graph from an in-memory payload (the
-        reference's SHM handoff, client.c:131-144): ``edges`` is stored as
-        given, so pass both directions.  Other graphs' files are never
-        rewritten (the per-file writer lock of primary_server.c:60 becomes
-        partition-granularity isolation)."""
-        row = arrow_table([(graph_id, vertices, edges)], GRAPH_SCHEMA)
-        self._write(self.spark.createDataFrame(row, GRAPH_SCHEMA))
+    def put(self, graphs: Iterable[tuple[int, list[int], list[tuple[int, int]]]]) -> None:
+        """Create-or-overwrite every graph in ``graphs``, ``(graph_id,
+        vertices, edges)`` payloads (the reference's SHM handoff,
+        client.c:131-144): ``edges`` is stored as given, so pass both
+        directions.  A graph_id given more than once keeps its last
+        payload (a later modify replaces an earlier add).  All of them are
+        written as one frame in one job, however many graphs; other graphs'
+        files are never rewritten (the per-file writer lock of
+        primary_server.c:60 becomes partition-granularity isolation)."""
+        rows = list({g[0]: g for g in graphs}.values())
+        if rows:
+            self._write(self.spark.createDataFrame(arrow_table(rows, GRAPH_SCHEMA), GRAPH_SCHEMA))
 
     def put_all(self, edges: DataFrame, vertices: DataFrame) -> None:
         """Bulk create-or-overwrite of every graph_id present in the input
@@ -102,14 +120,38 @@ class GraphCatalog:
         """Remove one graph.  Overwriting a partition with zero rows is not
         expressible via dynamic overwrite, so delete its directory (same
         effect as the reference never having the file)."""
-        import os
-        import shutil
-
-        part = f"{self.root}/graph_id={graph_id}"
+        part = self._partition(graph_id)
         if os.path.exists(part):
             shutil.rmtree(part)
 
+    def _partition(self, graph_id: int) -> str:
+        return f"{self.root}/graph_id={graph_id}"
+
     # -- read path: graph rows, and edge and vertex views over them --
+
+    def stored_edges(self, ids: Iterable[int]) -> dict[int, pa.Array]:
+        """The stored ``edges`` of each graph in ``ids`` that exists, read
+        from its partition directory's data files on the driver (names
+        starting with ``_`` or ``.`` are skipped, as Spark's reader skips
+        them): no Spark job.  Each value holds the graph's one row; its
+        element type is the one in the file, whose nullability flags
+        differ between ``put`` and ``put_all`` files, so cast before
+        combining.  Raises if a graph directory holds other than one row."""
+        found = {}
+        for gid in ids:
+            part = self._partition(gid)
+            if not os.path.isdir(part):
+                continue
+            tables = []
+            for name in os.listdir(part):
+                if not name.startswith(("_", ".")):
+                    with pq.ParquetFile(os.path.join(part, name)) as f:
+                        tables.append(f.read(columns=["edges"]))
+            rows = sum(t.num_rows for t in tables)
+            if rows != 1:
+                raise ValueError(f"graph {gid} has {rows} stored rows under {part}, expected 1")
+            found[gid] = next(t for t in tables if t.num_rows)["edges"].combine_chunks()
+        return found
 
     def graphs(self, ids: Iterable[int] | None = None) -> DataFrame:
         """The ``GRAPH_SCHEMA`` rows of the graphs in ``ids`` (all graphs

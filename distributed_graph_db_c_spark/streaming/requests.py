@@ -24,23 +24,31 @@ Payloads ride inside the request row (vertices + edge array), mirroring
 the SHM handoff for the reference's small graphs; bulk graph ingest is the
 G-format codec / catalog API instead (sources/gformat.py).
 
+Writes are folded: a micro-batch's op-1/op-2 payloads go to ONE
+``GraphCatalog.put`` call in seq order, which keeps the last write per
+graph and writes them all in one job.
+
 Reads are row-local, like the reference's secondary server that loads one
 G-file and traverses it in-process (secondary_server.c:283-326,463-501):
-each op-3/op-4 request is left-joined to its stored graph row, which holds
-the whole graph, and SQL higher-order-function expressions walk every
-request's graph inside the JVM — no supersteps, no shuffle, no Python
-worker.  The request frame is built from an Arrow table, not a pickled
-RDD.  A micro-batch costs one collect, the write jobs, and one reply
-append (plus the broadcast of the requested graph rows), however many
-reads it carries; the fleet of requests is the parallelism.
+each op-3/op-4 request row carries its stored graph's edges, read from the
+graph's partition file on the driver (``GraphCatalog.stored_edges``), and
+SQL higher-order-function expressions walk every request's graph inside
+the JVM — no scan, no join, no broadcast, no supersteps, no shuffle, no
+Python worker.  The request frame is one Arrow table, not a pickled RDD;
+being a local relation, it lets Spark's optimizer (ConvertToLocalRelation)
+evaluate the walk in the driver JVM while it plans the reply append.
+A micro-batch costs one collect, one write job if it holds writes, and
+one reply append, however many reads it carries.
 """
 
 from __future__ import annotations
 
 import functools
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -74,23 +82,31 @@ REQUEST_SCHEMA = StructType(
 
 RESULT_SCHEMA = "seq long, op int, graph_id int, id long, level long"
 
-# One read request as the kernels take it, before the join to its graph row;
-# the kernels pass its key columns through to the reply.
+# One read request as the kernels take it: its keys, its start vertex and
+# the edges of its stored graph row (NULL for a missing graph); the kernels
+# pass the key columns through to the reply.
 READ_KEYS = ["seq", "op", "graph_id"]
-READ_SCHEMA = StructType([REQUEST_SCHEMA[c] for c in READ_KEYS + ["start"]])
+READ_SCHEMA = StructType([REQUEST_SCHEMA[c] for c in READ_KEYS + ["start", "edges"]])
+_READ_ARGS = StructType(READ_SCHEMA.fields[:-1])  # what read_replies is given
+_EDGES_TYPE = to_arrow_schema(READ_SCHEMA).field("edges").type
 
 
 def read_replies(catalog: GraphCatalog, reads: list[tuple]) -> DataFrame:
-    """The reply rows (``RESULT_SCHEMA``) of ``reads``, ``READ_SCHEMA``
-    tuples: every request left-joined to its graph row and walked by the
+    """The reply rows (``RESULT_SCHEMA``) of ``reads``, ``(seq, op,
+    graph_id, start)`` tuples: one Arrow table of ``READ_SCHEMA`` rows,
+    each request with its graph's stored edges attached, walked by the
     kernel of its op."""
-    reqs = catalog.spark.createDataFrame(arrow_table(reads, READ_SCHEMA), READ_SCHEMA)
-    # left join: a request on a missing graph still gets its (start, 0) reply
-    with_graph = reqs.join(
-        catalog.graphs({r[2] for r in reads}).select("graph_id", "edges"), on="graph_id", how="left"
-    )
+    stored = {
+        gid: edges.cast(_EDGES_TYPE)
+        for gid, edges in catalog.stored_edges({r[2] for r in reads}).items()
+    }
+    # a request on a missing graph gets NULL edges, and so its (start, 0) reply
+    missing = pa.nulls(1, _EDGES_TYPE)
+    edges = pa.concat_arrays([stored.get(r[2], missing) for r in reads])
+    table = arrow_table(reads, _READ_ARGS).append_column("edges", edges)
+    rows = catalog.spark.createDataFrame(table, READ_SCHEMA)
     replies = [
-        kernel(with_graph.filter(F.col("op") == op), READ_KEYS)
+        kernel(rows.filter(F.col("op") == op), READ_KEYS)
         for op, kernel in ((4, bfs), (3, dfs_leaves))
         if any(r[1] == op for r in reads)
     ]
@@ -104,17 +120,21 @@ def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: 
     rows = sorted(batch_df.collect(), key=lambda r: r["seq"])
 
     # -- write path (ops 1/2 — identical semantics: full replace) --------
+    # one put, one job: handed in seq order, it keeps each graph's last write
+    writes = []
     for row in rows:
         if row["op"] in (1, 2):
             pairs = [(e["src"], e["dst"]) for e in (row["edges"] or [])]
-            catalog.put(row["graph_id"], row["vertices"] or [], pairs + [(d, s) for s, d in pairs])
+            writes.append((row["graph_id"], row["vertices"] or [], pairs + [(d, s) for s, d in pairs]))
+    if writes:
+        catalog.put(writes)
 
-    # -- read path (ops 3/4) — every request joined to its graph row ------
+    # -- read path (ops 3/4) — every request carries its graph row -------
     reads = [(r["seq"], r["op"], r["graph_id"], r["start"]) for r in rows if r["op"] in (3, 4)]
     if not reads:
         return
     # one file per call: each op branch would otherwise append one file
-    # per scan partition, and every reply poll rescans them all
+    # per input partition, and every reply poll rescans them all
     read_replies(catalog, reads).coalesce(1).write.mode("append").parquet(results_path)
 
 

@@ -126,9 +126,9 @@ def test_put_all_edgeless_replacement(spark, tmp_path):
     edges behind, through ``put`` and through ``put_all`` (an edgeless
     graph has no edge rows, so its row must still carry ``edges = []``)."""
     cat = GraphCatalog(spark, str(tmp_path / "catalog_empty"))
-    cat.put(1, *_payload(G1_MATRIX))
+    cat.put([(1, *_payload(G1_MATRIX))])
     assert cat.edges(1).count() == 8
-    cat.put(1, *_payload([[0] * 3 for _ in range(3)]))
+    cat.put([(1, *_payload([[0] * 3 for _ in range(3)]))])
     assert cat.edges(1).count() == 0
     assert cat.vertices(1).count() == 3
 
@@ -152,14 +152,14 @@ def test_catalog_add_modify_isolation(spark, tmp_path):
 
     root = tmp_path / "catalog"
     cat = GraphCatalog(spark, str(root))
-    cat.put(1, *_payload(G1_MATRIX))
+    cat.put([(1, *_payload(G1_MATRIX))])
     star = [
         [0, 1, 1, 1],
         [1, 0, 0, 0],
         [1, 0, 0, 0],
         [1, 0, 0, 0],
     ]
-    cat.put(2, *_payload(star))
+    cat.put([(2, *_payload(star))])
     assert cat.graph_ids() == [1, 2]
     assert cat.edges(1).count() == 8
     assert cat.edges(2).count() == 6
@@ -170,7 +170,7 @@ def test_catalog_add_modify_isolation(spark, tmp_path):
         [1, 0, 1],
         [1, 1, 0],
     ]
-    cat.put(1, *_payload(tri))
+    cat.put([(1, *_payload(tri))])
     assert cat.edges(1).count() == 6
     assert cat.vertices(1).count() == 3
     assert cat.edges(2).count() == 6  # isolation
@@ -179,11 +179,11 @@ def test_catalog_add_modify_isolation(spark, tmp_path):
     plan = cat.edges(1)._jdf.queryExecution().executedPlan().toString()
     assert "graph_id" in plan
 
-    # layout after put_all (bulk add of 3), put (modify 2) and an edgeless put
+    # layout after put_all (bulk add of 3) and one put of two graphs (modify
+    # 2, add an edgeless 4)
     e3, v3 = matrix_to_edges(spark, star, graph_id=3)
     cat.put_all(e3, v3)
-    cat.put(2, *_payload(tri))
-    cat.put(4, *_payload([[0] * 3 for _ in range(3)]))
+    cat.put([(2, *_payload(tri)), (4, *_payload([[0] * 3 for _ in range(3)]))])
     assert cat.graph_ids() == [1, 2, 3, 4]
     assert cat.edges(4).count() == 0
     assert cat.vertices(4).count() == 3
@@ -202,10 +202,10 @@ def test_catalog_isolation_in_static_overwrite_session(spark, tmp_path):
     spark.conf.set(key, "static")
     try:
         cat = GraphCatalog(spark, str(tmp_path / "catalog_static"))
-        cat.put(1, *_payload(G1_MATRIX))
+        cat.put([(1, *_payload(G1_MATRIX))])
         e2, v2 = matrix_to_edges(spark, G1_MATRIX, graph_id=2)
         cat.put_all(e2, v2)
-        cat.put(3, [1], [])
+        cat.put([(3, [1], [])])
         assert cat.graph_ids() == [1, 2, 3]
         assert cat.edges(1).count() == cat.edges(2).count() == 8
     finally:
@@ -214,7 +214,7 @@ def test_catalog_isolation_in_static_overwrite_session(spark, tmp_path):
 
 def test_catalog_drop(spark, tmp_path):
     cat = GraphCatalog(spark, str(tmp_path / "catalog2"))
-    cat.put(7, *_payload(G1_MATRIX))
+    cat.put([(7, *_payload(G1_MATRIX))])
     assert cat.graph_ids() == [7]
     cat.drop(7)
     assert cat.graph_ids() == []
@@ -278,7 +278,7 @@ def test_write_gformat_dir_roundtrip(spark, tmp_path):
         [1, 0, 0, 0],
     ]
     for gid, m in [(1, G1_MATRIX), (2, star), (14, [[0] * 3 for _ in range(3)])]:
-        cat.put(gid, *_payload(m))
+        cat.put([(gid, *_payload(m))])
 
     out = tmp_path / "export"
     gids = write_gformat_dir(cat.edges(), cat.vertices(), str(out))

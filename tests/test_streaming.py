@@ -399,10 +399,11 @@ def _reply_oracle(n: int, edges: list[tuple[int, int]], op: int, start: int | No
     return {(v, None) for v in level if len(adj[v]) <= 1 and not (v == start and adj[v])}
 
 
-def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path):
+def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path, monkeypatch):
     """One mixed micro-batch over a seeded fleet: every read's reply rows
     equal the pure-Python oracle, including the edge cases of today's
-    reply contract."""
+    reply contract.  The batch's writes are folded into one catalog write
+    that keeps the last write (in seq order) per graph."""
     import random
 
     from distributed_graph_db_c_spark.catalog import GraphCatalog
@@ -447,18 +448,36 @@ def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path):
         (6, 4, None),  # no start vertex at all
         (6, 3, None),
     ]
+    added = (5, [(1, 5), (2, 5)])  # graph 10 is new
     rows = [(seq, op, gid, None, None, start) for seq, (gid, op, start) in enumerate(reads, 1)]
+    # an earlier write to graph 9, which the modify after it overrides
+    rows.append((0, 1, 9, [1, 2, 3], [(1, 3)], None))
     write_seq = len(rows) + 1
     rows.append((write_seq, 2, 9, list(range(1, 5)), replaced[1], None))
     rows.append((write_seq + 1, 4, 9, None, None, 4))  # reads the write before it
     rows.append((write_seq + 2, 3, 9, None, None, 2))
-    fleet[9] = replaced
+    rows.append((write_seq + 3, 1, 10, list(range(1, 6)), added[1], None))
+    rows.append((write_seq + 4, 4, 10, None, None, 1))
+    rows.append((write_seq + 5, 3, 10, None, None, 3))
+    fleet[9], fleet[10] = replaced, added
     rng.shuffle(rows)  # dispatch orders the batch by seq itself
 
+    writes = []
+    write = cat._write
+    monkeypatch.setattr(cat, "_write", lambda df: writes.append(df) or write(df))
     results = str(tmp_path / "results")
     dispatch_requests(cat, spark.createDataFrame(rows, REQUEST_SCHEMA), results)
+    assert len(writes) == 1  # three writes to two graphs, one catalog write
     # one dispatch call appends one reply file, however many reads it holds
     assert len(list((tmp_path / "results").glob("*.parquet"))) == 1
+    stored = {
+        r["graph_id"]: (sorted(r["vertices"]), sorted((e["src"], e["dst"]) for e in r["edges"]))
+        for r in cat.graphs().collect()
+    }
+    assert stored == {
+        gid: (list(range(1, n + 1)), sorted(e for a, b in es for e in ((a, b), (b, a))))
+        for gid, (n, es) in fleet.items()
+    }
 
     got: dict[int, set] = {}
     for r in spark.read.schema(RESULT_SCHEMA).parquet(results).collect():
@@ -516,10 +535,52 @@ def test_dispatch_duplicate_edges_and_dense_graph_match_oracle(spark, tmp_path):
     assert _reply_oracle(*dup, 3, 2) == {(1, None), (3, None)}
 
 
+def test_dispatch_sees_another_catalogs_writes(spark, tmp_path):
+    """A catalog keeps no state between reads: after a second catalog on
+    the same root (another process, in production) adds one graph and
+    drops another, the first catalog's next dispatch serves the new graph
+    and gives the dropped one today's missing-graph reply."""
+    from distributed_graph_db_c_spark.catalog import GraphCatalog
+    from distributed_graph_db_c_spark.streaming.requests import (
+        REQUEST_SCHEMA,
+        RESULT_SCHEMA,
+        dispatch_requests,
+    )
+
+    root = str(tmp_path / "catalog")
+    cat = GraphCatalog(spark, root)
+    cat.put([(1, [1, 2], [(1, 2), (2, 1)]), (2, [1, 2, 3], [(1, 2), (2, 1), (2, 3), (3, 2)])])
+
+    def replies(name: str, reads: list[tuple[int, int, int]]) -> dict:
+        rows = [(seq, op, gid, None, None, start) for seq, (op, gid, start) in enumerate(reads, 1)]
+        path = str(tmp_path / name)
+        dispatch_requests(cat, spark.createDataFrame(rows, REQUEST_SCHEMA), path)
+        got: dict[int, set] = {}
+        for r in spark.read.schema(RESULT_SCHEMA).parquet(path).collect():
+            got.setdefault(r["seq"], set()).add((r["id"], r["level"]))
+        return got
+
+    assert replies("before", [(4, 2, 1), (3, 2, 1)]) == {
+        1: {(1, 0), (2, 1), (3, 2)},
+        2: {(3, None)},
+    }
+    other = GraphCatalog(spark, root)
+    other.put([(3, [1, 2, 3, 4], [(1, 4), (4, 1)])])
+    other.drop(2)
+    assert replies("after", [(4, 2, 1), (3, 2, 1), (4, 3, 1), (3, 3, 1)]) == {
+        1: {(1, 0)},  # missing graph: BFS gives (start, 0) ...
+        2: {(1, None)},  # ... and DFS {start} (ROADMAP item 1)
+        3: {(1, 0), (4, 1)},
+        4: {(4, None)},
+    }
+
+
 def test_serving_frames_run_no_python(spark, tmp_path, monkeypatch):
     """The frames a served micro-batch builds run inside the JVM: the
     reply plan holds no Python evaluation node, and neither the request
-    frame nor a write's graph-row frame scans a pickled Python RDD."""
+    frame nor a write's graph-row frame scans a pickled Python RDD.  The
+    request rows carry their graph rows, so the reply plan scans no file
+    and needs no join or shuffle to attach them."""
     from distributed_graph_db_c_spark.catalog import GraphCatalog
     from distributed_graph_db_c_spark.streaming.requests import read_replies
 
@@ -527,14 +588,16 @@ def test_serving_frames_run_no_python(spark, tmp_path, monkeypatch):
         return df._jdf.queryExecution().executedPlan().toString()
 
     cat = GraphCatalog(spark, str(tmp_path / "catalog"))
-    cat.put(1, [1, 2, 3], [(1, 2), (2, 1), (2, 3), (3, 2)])
+    cat.put([(1, [1, 2, 3], [(1, 2), (2, 1), (2, 3), (3, 2)])])
     replies = read_replies(cat, [(1, 4, 1, 1), (2, 3, 1, 1), (3, 4, 9, 2)])
     written = []
     monkeypatch.setattr(cat, "_write", written.append)
-    cat.put(2, [1, 2], [(1, 2), (2, 1)])
+    cat.put([(2, [1, 2], [(1, 2), (2, 1)])])
 
     python_nodes = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
     assert not [n for n in python_nodes if n in plan(replies)], plan(replies)
+    scan_nodes = ("FileScan", "Exchange", "BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin")
+    assert not [n for n in scan_nodes if n in plan(replies)], plan(replies)
     for df in (replies, *written):
         assert "ExistingRDD" not in plan(df), plan(df)
     assert len(written) == 1

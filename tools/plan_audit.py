@@ -20,6 +20,7 @@ import sys
 
 sys.path.insert(0, ".")
 
+from distributed_graph_db_c_spark.queries.dedup import _grade_corpus
 from distributed_graph_db_c_spark.registry import REGISTRY, _ensure_loaded
 from distributed_graph_db_c_spark.session import get_spark
 
@@ -28,7 +29,13 @@ SF_DIR = "/root/testdata/sf0.01"
 # plan nodes that ship rows to a Python worker
 _PYTHON_NODES = r"FlatMapCoGroupsInPandas|MapInPandas|ArrowEvalPython|BatchEvalPython"
 
-# query -> list of (label, regex expected in formatted plan, must_match)
+# Audited frames that are not registered queries: a frame a query builds
+# before it checkpoints it, whose scan the query's own plan no longer shows.
+FRAMES = {
+    "dedup_grade_corpus": lambda spark: _grade_corpus(spark, SF_DIR),
+}
+
+# query (or FRAMES name) -> list of (label, regex expected in formatted plan, must_match)
 EXPECTATIONS: dict[str, list[tuple[str, str, bool]]] = {
     "rel_q6_forecast_revenue": [
         # tight filter on a fact scan MUST reach parquet
@@ -832,6 +839,11 @@ EXPECTATIONS: dict[str, list[tuple[str, str, bool]]] = {
         ("no cartesian", r"CartesianProduct|BroadcastNestedLoopJoin", False),
         ("bucket equijoin", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", True),
         ("no row-python udf", r"BatchEvalPython", False),
+    ],
+    "dedup_grade_corpus": [
+        # the corpus dedup_semantic_decontaminate checkpoints before its
+        # join (so that plan reads an ExistingRDD): its embeddings scan
+        # reads only the columns it needs
         ("column pruning", r"ReadSchema: [^\n]*embedding", True),
     ],
     "dedup_decontaminate_by_source": [
@@ -900,7 +912,7 @@ def audit(names: list[str] | None = None) -> tuple[int, int, list[str]]:
     for name, checks in EXPECTATIONS.items():
         if names and name not in names:
             continue
-        df = REGISTRY[name].run(spark, SF_DIR)
+        df = FRAMES[name](spark) if name in FRAMES else REGISTRY[name].run(spark, SF_DIR)
         plan = formatted_plan(df)
         for label, pattern, want in checks:
             hit = re.search(pattern, plan) is not None
