@@ -4,34 +4,43 @@ Storage shape (``schemas.GRAPH_SCHEMA``): ONE row per graph, ``(graph_id,
 vertices array<long>, edges array<struct<src, dst>>)`` with edges in both
 directions — the reference's unit of storage, one G<i>.txt file per graph
 holding n plus the matrix, written in one pass (primary_server.c:118-128).
-A graph's vertices and edges land in one file in one job commit, so a
-crash never leaves a torn graph, and an edgeless graph is ``edges = []``
-by construction.  Deliberate bound: a graph must fit in one row, which is
-what lets the serving kernels (``operators.traversal.bfs_graph_rows`` /
-``dfs_leaves_graph_rows``) traverse each request's graph row with SQL
-expressions evaluated on that row.  ``put`` writes a whole micro-batch's
-graphs as one frame built from an Arrow table, so the writes of a batch
-run one job and no Python worker.  ``stored_edges`` hands a read its graph
-row straight from the partition's data files on the driver, with no Spark
-job; it reads the files on every call, so a write by another process (or
-another catalog object on the same root) is seen by the next read, and
-there is no cache to invalidate.
+A graph's vertices and edges land in one file, published by one
+directory rename, so a crash never leaves a torn graph, and an edgeless
+graph is ``edges = []`` by construction.  Deliberate bound: a graph must
+fit in one row, which is what lets the serving kernels
+(``operators.traversal.bfs_graph_row_arrays`` /
+``dfs_leaves_graph_row_arrays``) traverse each request's graph row with
+SQL expressions evaluated on that row.
 
-The root is a local filesystem path: ``stored_edges`` lists and reads the
-partition directories, and ``drop`` deletes them, with ``os``.
+``put`` writes a micro-batch's graphs on the driver with ``pyarrow``, no
+Spark job: each graph's row goes to a hidden staging directory, then each
+old partition directory is deleted and the staged one renamed into its
+place — the delete-plus-rename that Spark's dynamic-overwrite commit does.
+``put_all`` (bulk ingest) stays one Spark job.  ``stored_edges`` hands a
+read its graph row straight from the partition's data file on the driver,
+with no Spark job; it reads the files on every call, so a write by another
+process (or another catalog object on the same root) is seen by the next
+read, and there is no cache to invalidate.  Files are written without the
+Arrow schema in their metadata: Spark reads them with ``GRAPH_SCHEMA`` and
+``stored_edges`` callers cast.
+
+The root is a local filesystem path: ``put`` and ``drop`` write, rename
+and delete the partition directories, and ``stored_edges`` lists and reads
+them, with ``os``.
 
 Reference parity (SURVEY.md §2.1 ops 1/2):
 - op 1 "add graph"    (primary_server.c:45-157): create-or-overwrite one
-  graph file.  Ours: dynamic partition overwrite of one graph_id.
+  graph file.  Ours: replace one graph_id partition directory.
 - op 2 "modify graph" (primary_server.c:140-143, file opened "w+" =
   truncate at :65): byte-identical to op 1 — full replace, never a merge.
   So ``put`` IS both ops; no upsert logic exists by design.
 - readers-writers isolation (primary_server.c:60,150; secondary_server.c:
   229-234,297-303): a graph is never torn — its row is one file written
-  in one job commit — but the commit replaces the partition directory,
-  so a read of that graph at that instant can find it missing or lose a
-  file it listed (an error, as in a Spark scan); no lock orders them
-  (upgrade path for true ACID: Delta/Iceberg table format).
+  before its directory is published — but the commit replaces the
+  partition directory, so a read of that graph at that instant can find
+  it missing or lose a file it listed (an error, as in a Spark scan); no
+  lock orders them (upgrade path for true ACID: Delta/Iceberg table
+  format).
 
 Scale posture: a query on one graph prunes to one partition directory
 (partition pruning is visible in the scan's PartitionFilters), and a
@@ -44,6 +53,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from collections.abc import Iterable
 
 import pyarrow as pa
@@ -66,13 +76,31 @@ class GraphCatalog:
         vertices, edges)`` payloads (the reference's SHM handoff,
         client.c:131-144): ``edges`` is stored as given, so pass both
         directions.  A graph_id given more than once keeps its last
-        payload (a later modify replaces an earlier add).  All of them are
-        written as one frame in one job, however many graphs; other graphs'
-        files are never rewritten (the per-file writer lock of
-        primary_server.c:60 becomes partition-granularity isolation)."""
+        payload (a later modify replaces an earlier add).  Written on the
+        driver, no Spark job: every graph's file is staged before any
+        partition is replaced, so a payload that fails to type (a NULL
+        id, vertex or edge end included) or to write replaces none.
+        Other graphs' files are never rewritten (the per-file writer lock
+        of primary_server.c:60 becomes partition-granularity isolation)."""
         rows = list({g[0]: g for g in graphs}.values())
-        if rows:
-            self._write(self.spark.createDataFrame(arrow_table(rows, GRAPH_SCHEMA), GRAPH_SCHEMA))
+        if not rows:
+            return
+        table = arrow_table(rows, GRAPH_SCHEMA).drop_columns("graph_id")
+        # a "." name: Spark's reader and stored_edges skip it
+        stage = f"{self.root}/.put-{uuid.uuid4().hex}"
+        try:
+            for i, (gid, *_) in enumerate(rows):
+                os.makedirs(f"{stage}/graph_id={gid}")
+                pq.write_table(
+                    table.slice(i, 1),
+                    f"{stage}/graph_id={gid}/part-{uuid.uuid4().hex}.parquet",
+                    store_schema=False,
+                )
+            for gid, *_ in rows:
+                self.drop(gid)
+                os.rename(f"{stage}/graph_id={gid}", self._partition(gid))
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
     def put_all(self, edges: DataFrame, vertices: DataFrame) -> None:
         """Bulk create-or-overwrite of every graph_id present in the input
@@ -98,19 +126,14 @@ class GraphCatalog:
         # core: AQE would coalesce this tiny shuffle into one task that
         # writes every graph's file in turn.
         by_graph = tagged.repartition(self.spark.sparkContext.defaultParallelism, "graph_id")
-        self._write(
-            by_graph.groupBy("graph_id").agg(
-                F.collect_list("v").alias("vertices"), F.collect_list("e").alias("edges")
-            )
-        )
-
-    def _write(self, graphs: DataFrame) -> None:
         # Dynamic overwrite replaces only the graph_id partitions present in
-        # ``graphs``; set per write because a session not built by
+        # the input; set per write because a session not built by
         # ``session.get_spark`` may run Spark's default STATIC mode, which
         # would wipe every other graph.
         (
-            graphs.write.partitionBy("graph_id")
+            by_graph.groupBy("graph_id")
+            .agg(F.collect_list("v").alias("vertices"), F.collect_list("e").alias("edges"))
+            .write.partitionBy("graph_id")
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(self.root)

@@ -18,13 +18,15 @@ Reference semantics being re-expressed:
 
 Two kernel families, chosen by the caller (nothing counts edges to pick):
 
-- Graph-row kernels (``bfs_graph_rows``/``dfs_leaves_graph_rows``): each
-  start row carries its whole graph as one ``edges`` array — the serving
-  path joins requests to the catalog's stored rows, analytics callers fold
-  an edge frame with ``graph_rows`` (one ``groupBy``) — and the traversal
-  is SQL higher-order-function expressions on that row: no supersteps and
-  no Python worker.  The reference's regime: one loaded graph traversed
-  in-process (secondary_server.c:463-501).
+- Graph-row kernels (``bfs_graph_row_arrays``/
+  ``dfs_leaves_graph_row_arrays``, and their exploded ``bfs_graph_rows``/
+  ``dfs_leaves_graph_rows``): each start row carries its whole graph as
+  one ``edges`` array — the serving path attaches the catalog's stored
+  rows, analytics callers fold an edge frame with ``graph_rows`` (one
+  ``groupBy``) — and the traversal is SQL higher-order-function
+  expressions on that row: no supersteps and no Python worker.  The
+  reference's regime: one loaded graph traversed in-process
+  (secondary_server.c:463-501).
 - Iterative superstep kernels (``bfs``, ``dfs_leaves``,
   ``connected_components``, ``pagerank``, ``sssp``, ``kcore``): the
   textbook BSP/Pregel loop (GraphX, OSDI'14) as DataFrame ops, one
@@ -383,44 +385,62 @@ def _walk_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
     ).withColumn("walk", F.expr(_BFS_WALK))
 
 
-def bfs_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
-    """Row-local BFS for start rows that carry their whole graph:
-    Catalyst expressions on each row with no shuffle, no supersteps and
-    no Python worker (the reference's secondary server loads one G-file
-    and traverses it in-process, secondary_server.c:463-501).
+def bfs_graph_row_arrays(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Row-local BFS for start rows that carry their whole graph, one
+    output row per start row: Catalyst expressions on each row with no
+    shuffle, no supersteps and no Python worker (the reference's secondary
+    server loads one G-file and traverses it in-process,
+    secondary_server.c:463-501).
 
     Args:
-      rows: ``keys`` + (start, edges) — requests left-joined to their
-        ``schemas.GRAPH_SCHEMA`` row, or :func:`graph_rows`; ``edges`` is
-        NULL for a graph that does not exist.
+      rows: ``keys`` + (start, edges) — requests carrying their
+        ``schemas.GRAPH_SCHEMA`` row's edges, or :func:`graph_rows`;
+        ``edges`` is NULL for a graph that does not exist.
       keys: the columns that identify a start row, passed through.
     Returns:
-      ``keys`` + (id, level) — the same rows :func:`bfs` gives per start,
-      including ``(start, 0)`` for a missing graph or a start outside the
-      graph.  Requires each graph to fit in one row, which the catalog's
-      storage shape already bounds.
+      ``keys`` + (id array<bigint>, level array<bigint>) — the reached
+      vertices in BFS order and their levels, ``[start]``/``[0]`` for a
+      missing graph or a start outside the graph.  Requires each graph to
+      fit in one row, which the catalog's storage shape already bounds.
     """
     return _walk_graph_rows(rows, keys).select(
-        *keys,
-        F.inline(
-            F.expr("zip_with(walk.vis, walk.lvl, (v, l) -> named_struct('id', v, 'level', l))")
-        ),
+        *keys, F.col("walk.vis").alias("id"), F.col("walk.lvl").alias("level")
     )
 
 
-def dfs_leaves_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
-    """Row-local :func:`dfs_leaves` over the same input as
-    :func:`bfs_graph_rows`; ``level`` is NULL.  A graph with no leaf
-    reachable from the start (a triangle) yields no row."""
+def bfs_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """:func:`bfs_graph_row_arrays` exploded: ``keys`` + (id, level), the
+    same rows :func:`bfs` gives per start."""
+    return bfs_graph_row_arrays(rows, keys).select(*keys, F.inline(F.arrays_zip("id", "level")))
+
+
+def _walk_with_hubs(rows: DataFrame, keys: list[str]) -> DataFrame:
     return (
         _walk_graph_rows(rows, keys)
         .withColumn("sorted", F.array_sort("edges"))
         .withColumn("hubs", F.expr(_HUBS))
-        .select(
-            *keys,
-            F.explode(F.expr(_LEAVES)).alias("id"),
-            F.lit(None).cast("long").alias("level"),
-        )
+    )
+
+
+def dfs_leaves_graph_row_arrays(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Row-local :func:`dfs_leaves` over the same input as
+    :func:`bfs_graph_row_arrays`, one output row per start row: ``keys`` +
+    (id array<bigint>, level), ``level`` NULL.  A graph with no leaf
+    reachable from the start (a triangle) yields ``id = []``."""
+    return _walk_with_hubs(rows, keys).select(
+        *keys, F.expr(_LEAVES).alias("id"), F.lit(None).cast("array<bigint>").alias("level")
+    )
+
+
+def dfs_leaves_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """:func:`dfs_leaves_graph_row_arrays` exploded: ``keys`` + (id,
+    level), ``level`` NULL; a start with no leaf yields no row."""
+    # Explode the leaf expression, not the array form's ``id`` column: on
+    # a column the optimizer infers ``size(id) > 0`` and pushes it below
+    # the projection, which then walks every graph twice
+    # (InferFiltersFromGenerate).
+    return _walk_with_hubs(rows, keys).select(
+        *keys, F.explode(F.expr(_LEAVES)).alias("id"), F.lit(None).cast("long").alias("level")
     )
 
 

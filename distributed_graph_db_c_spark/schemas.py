@@ -62,10 +62,14 @@ def arrow_table(rows: list[tuple], schema: StructType) -> pa.Table:
     value may be a tuple) as an Arrow table typed by ``schema``.
     ``spark.createDataFrame`` takes such a table over Arrow whatever the
     session's Arrow setting, where a list of rows becomes a pickled RDD
-    that needs a Python worker."""
+    that needs a Python worker.  No rows give an empty table of
+    ``schema``.  A NULL where ``schema`` forbids one, at any nesting
+    depth, raises (the cast checks it, as ``createDataFrame`` does)."""
     arrow = to_arrow_schema(schema)
+    if not rows:
+        return arrow.empty_table()
     cols = [pa.array(list(c), f.type) for c, f in zip(zip(*rows), arrow)]
-    return pa.Table.from_arrays(cols, schema=arrow)
+    return pa.Table.from_arrays(cols, schema=arrow).cast(arrow)
 
 
 TABLE_NAMES = [

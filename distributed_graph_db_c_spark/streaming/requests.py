@@ -15,7 +15,7 @@ dropped (SURVEY.md §2.1):
 - Within a micro-batch, ALL writes apply before any read — reads see a
   consistent post-write snapshot (the readers-writers guarantee; the
   reference's actual interleaving is scheduler-dependent).
-- Replies: op 3/4 results append to a results table (seq, op, graph_id,
+- Replies: op 3/4 results append to a results dataset (seq, op, graph_id,
   id, level) — unbounded, replacing the 200-char mtext truncation cap.
 - Routing/multiplexing (op+10*seq, mtype arithmetic): no equivalent
   needed; Spark's scheduler owns placement.
@@ -26,7 +26,9 @@ G-format codec / catalog API instead (sources/gformat.py).
 
 Writes are folded: a micro-batch's op-1/op-2 payloads go to ONE
 ``GraphCatalog.put`` call in seq order, which keeps the last write per
-graph and writes them all in one job.
+graph and writes them on the driver with ``pyarrow`` (no Spark job), as
+the reference's primary server writes G<i>.txt in-process
+(primary_server.c:118-128).
 
 Reads are row-local, like the reference's secondary server that loads one
 G-file and traverses it in-process (secondary_server.c:283-326,463-501):
@@ -34,18 +36,24 @@ each op-3/op-4 request row carries its stored graph's edges, read from the
 graph's partition file on the driver (``GraphCatalog.stored_edges``), and
 SQL higher-order-function expressions walk every request's graph inside
 the JVM — no scan, no join, no broadcast, no supersteps, no shuffle, no
-Python worker.  The request frame is one Arrow table, not a pickled RDD;
-being a local relation, it lets Spark's optimizer (ConvertToLocalRelation)
-evaluate the walk in the driver JVM while it plans the reply append.
-A micro-batch costs one collect, one write job if it holds writes, and
-one reply append, however many reads it carries.
+Python worker.  The request frame is one Arrow table, and the kernels
+give one row per request (the reply arrays), so each op's reply frame is
+a projection of a local relation: Spark's optimizer (ConvertToLocalRelation)
+evaluates the walk while it plans, and its ``collect`` runs no job.  The
+reply rows are flattened on the driver and published as one parquet file
+per dispatch call (the reference's one ``msgsnd`` per reply).  A
+micro-batch costs one Spark job, the collect of the batch itself, however
+many writes and reads it carries.
 """
 
 from __future__ import annotations
 
-import functools
+import os
+import time
+import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -61,8 +69,8 @@ from ..catalog import GraphCatalog
 from ..schemas import arrow_table
 # ``bfs`` and ``dfs_leaves`` are module attributes on purpose: they are the
 # per-op kernel seams that perfbench/run.py traces by name.
-from ..operators.traversal import bfs_graph_rows as bfs
-from ..operators.traversal import dfs_leaves_graph_rows as dfs_leaves
+from ..operators.traversal import bfs_graph_row_arrays as bfs
+from ..operators.traversal import dfs_leaves_graph_row_arrays as dfs_leaves
 
 REQUEST_SCHEMA = StructType(
     [
@@ -80,8 +88,6 @@ REQUEST_SCHEMA = StructType(
     ]
 )
 
-RESULT_SCHEMA = "seq long, op int, graph_id int, id long, level long"
-
 # One read request as the kernels take it: its keys, its start vertex and
 # the edges of its stored graph row (NULL for a missing graph); the kernels
 # pass the key columns through to the reply.
@@ -90,12 +96,19 @@ READ_SCHEMA = StructType([REQUEST_SCHEMA[c] for c in READ_KEYS + ["start", "edge
 _READ_ARGS = StructType(READ_SCHEMA.fields[:-1])  # what read_replies is given
 _EDGES_TYPE = to_arrow_schema(READ_SCHEMA).field("edges").type
 
+# One reply row: a read's keys and one vertex it reached (DFS: level NULL).
+RESULT_SCHEMA = StructType(
+    [REQUEST_SCHEMA[c] for c in READ_KEYS]
+    + [StructField("id", LongType()), StructField("level", LongType())]
+)
 
-def read_replies(catalog: GraphCatalog, reads: list[tuple]) -> DataFrame:
+
+def read_replies(catalog: GraphCatalog, reads: list[tuple]) -> pa.Table:
     """The reply rows (``RESULT_SCHEMA``) of ``reads``, ``(seq, op,
     graph_id, start)`` tuples: one Arrow table of ``READ_SCHEMA`` rows,
     each request with its graph's stored edges attached, walked by the
-    kernel of its op."""
+    kernel of its op into one row of reply arrays per request, collected
+    (a local relation: no Spark job) and flattened."""
     stored = {
         gid: edges.cast(_EDGES_TYPE)
         for gid, edges in catalog.stored_edges({r[2] for r in reads}).items()
@@ -105,12 +118,21 @@ def read_replies(catalog: GraphCatalog, reads: list[tuple]) -> DataFrame:
     edges = pa.concat_arrays([stored.get(r[2], missing) for r in reads])
     table = arrow_table(reads, _READ_ARGS).append_column("edges", edges)
     rows = catalog.spark.createDataFrame(table, READ_SCHEMA)
-    replies = [
-        kernel(rows.filter(F.col("op") == op), READ_KEYS)
-        for op, kernel in ((4, bfs), (3, dfs_leaves))
-        if any(r[1] == op for r in reads)
-    ]
-    return functools.reduce(DataFrame.unionByName, replies)
+    replies = []
+    for op, kernel in ((4, bfs), (3, dfs_leaves)):
+        if any(r[1] == op for r in reads):
+            for seq, _, gid, ids, levels in kernel(rows.filter(F.col("op") == op), READ_KEYS).collect():
+                replies += [(seq, op, gid, v, lvl) for v, lvl in zip(ids, levels or [None] * len(ids))]
+    return arrow_table(replies, RESULT_SCHEMA)
+
+
+def _publish(table: pa.Table, directory: str, name: str) -> None:
+    """Write ``table`` as ``directory/name``: under a "_" name first, which
+    Spark's file reader and file stream source skip, then renamed into
+    place, so no reader lists a half-written file."""
+    tmp = os.path.join(directory, "_" + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(directory, name))
 
 
 def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: str) -> None:
@@ -120,7 +142,7 @@ def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: 
     rows = sorted(batch_df.collect(), key=lambda r: r["seq"])
 
     # -- write path (ops 1/2 — identical semantics: full replace) --------
-    # one put, one job: handed in seq order, it keeps each graph's last write
+    # one put, on the driver: handed in seq order, it keeps each graph's last write
     writes = []
     for row in rows:
         if row["op"] in (1, 2):
@@ -133,9 +155,9 @@ def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: 
     reads = [(r["seq"], r["op"], r["graph_id"], r["start"]) for r in rows if r["op"] in (3, 4)]
     if not reads:
         return
-    # one file per call: each op branch would otherwise append one file
-    # per input partition, and every reply poll rescans them all
-    read_replies(catalog, reads).coalesce(1).write.mode("append").parquet(results_path)
+    # one reply file per call, empty when no read reached a reply row
+    os.makedirs(results_path, exist_ok=True)
+    _publish(read_replies(catalog, reads), results_path, f"part-{uuid.uuid4().hex}.parquet")
 
 
 def request_dispatcher(catalog: GraphCatalog, results_path: str):
@@ -170,8 +192,6 @@ class RequestServer:
         root: str,
         poll: str = "500 milliseconds",
     ):
-        import os
-
         self.spark = spark
         self.catalog = catalog
         self.in_dir = os.path.join(root, "in")
@@ -195,22 +215,12 @@ class RequestServer:
     def submit(self, rows: list) -> None:
         """Enqueue one request batch (list of REQUEST_SCHEMA-shaped rows)
         as a single file — one micro-batch on the server side."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        # written under a "_" name, which the file source skips, then
-        # renamed into place: the stream never lists a half-written file
-        tmp = os.path.join(self.in_dir, f"_req{self._n:06d}.parquet")
-        pq.write_table(arrow_table(rows, REQUEST_SCHEMA), tmp)
-        os.replace(tmp, os.path.join(self.in_dir, f"req{self._n:06d}.parquet"))
+        _publish(arrow_table(rows, REQUEST_SCHEMA), self.in_dir, f"req{self._n:06d}.parquet")
         self._n += 1
 
     def replies(self, seq: int | None = None) -> DataFrame:
         """Reply view, correlated by seq — a plain DataFrame over the
         results sink (empty until the first read op completes)."""
-        import os
-
         if not os.path.isdir(self.results_path) or not any(
             f.endswith(".parquet") for f in os.listdir(self.results_path)
         ):
@@ -222,8 +232,6 @@ class RequestServer:
     def await_reply(self, seq: int, timeout_sec: float = 60.0) -> DataFrame:
         """Block until reply rows for ``seq`` exist (the client's blocking
         ``msgrcv`` on its mtype, `client.c:155`); raises on timeout."""
-        import time
-
         deadline = time.monotonic() + timeout_sec
         while time.monotonic() < deadline:
             if self.query.exception() is not None:

@@ -212,6 +212,81 @@ def test_catalog_isolation_in_static_overwrite_session(spark, tmp_path):
         spark.conf.set(key, prev)
 
 
+def _catalog_rows(cat):
+    """Everything the catalog's readers return, order-free: graph rows,
+    edge and vertex views, graph ids and the driver-read stored edges."""
+    ids = cat.graph_ids()
+    return {
+        "graphs": sorted(
+            (r["graph_id"], sorted(r["vertices"]), sorted((e["src"], e["dst"]) for e in r["edges"]))
+            for r in cat.graphs().collect()
+        ),
+        "edges": sorted(tuple(r) for r in cat.edges().collect()),
+        "vertices": sorted(tuple(r) for r in cat.vertices().collect()),
+        "graph_ids": ids,
+        "stored_edges": {
+            gid: sorted((e["src"], e["dst"]) for e in edges[0].as_py())
+            for gid, edges in cat.stored_edges(ids).items()
+        },
+    }
+
+
+def test_put_failure_replaces_no_graph(spark, tmp_path, monkeypatch):
+    """A ``put`` that fails leaves the catalog as it was: a payload Arrow
+    cannot type raises before anything is written, a write that fails on
+    a later graph replaces none of the graphs staged before it, and no
+    ``.put-*`` staging directory is left behind."""
+    import pyarrow as pa
+
+    from distributed_graph_db_c_spark import catalog as catalog_mod
+
+    root = tmp_path / "catalog"
+    cat = GraphCatalog(spark, str(root))
+    cat.put([(1, *_payload(G1_MATRIX)), (2, [1], [])])
+    before = _catalog_rows(cat)
+    tri = _payload([[0, 1, 1], [1, 0, 1], [1, 1, 0]])
+
+    with pytest.raises(pa.ArrowInvalid, match="convert 'x'"):
+        cat.put([(1, *tri), (2, ["x"], [])])
+    # GRAPH_SCHEMA's fields are non-nullable at every depth
+    for bad in [(None, [1], []), (2, [1, None], []), (2, [1], [(1, None)]), (2, [1], [None])]:
+        with pytest.raises(ValueError, match="null"):
+            cat.put([(1, *tri), bad])
+
+    write = catalog_mod.pq.write_table
+    calls = []
+
+    def failing_write(table, path, **kw):
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("disk full")
+        write(table, path, **kw)
+
+    monkeypatch.setattr(catalog_mod.pq, "write_table", failing_write)
+    with pytest.raises(OSError, match="disk full"):
+        cat.put([(1, *tri), (2, *tri), (3, *tri)])
+    monkeypatch.undo()
+
+    assert len(calls) == 2
+    assert not [p.name for p in root.iterdir() if p.name.startswith(".put-")]
+    assert _catalog_rows(cat) == before
+
+
+def test_put_replaces_put_all_graph_identically(spark, tmp_path):
+    """A graph bulk-written by ``put_all`` (a Spark job) and replaced by
+    ``put`` with the same payload (a driver-side ``pyarrow`` write) reads
+    back the same rows through every reader."""
+    star = [[0, 1, 1, 1], [1, 0, 0, 0], [1, 0, 0, 0], [1, 0, 0, 0]]
+    graphs = {1: G1_MATRIX, 2: star, 3: [[0] * 3 for _ in range(3)]}
+    cat = GraphCatalog(spark, str(tmp_path / "catalog"))
+    for gid, m in graphs.items():
+        cat.put_all(*matrix_to_edges(spark, m, graph_id=gid))
+    spark_written = _catalog_rows(cat)
+    assert spark_written["graph_ids"] == [1, 2, 3]
+    cat.put([(gid, *_payload(m)) for gid, m in graphs.items()])
+    assert _catalog_rows(cat) == spark_written
+
+
 def test_catalog_drop(spark, tmp_path):
     cat = GraphCatalog(spark, str(tmp_path / "catalog2"))
     cat.put([(7, *_payload(G1_MATRIX))])

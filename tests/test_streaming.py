@@ -371,6 +371,19 @@ def test_watermark_late_filter_lags_one_batch(spark, tmp_path):
         cleanup(scratch)
 
 
+def _spark_jobs(spark, group: str, fn) -> int:
+    """Run ``fn()`` under job group ``group``; return how many Spark jobs it
+    submitted (counted once the listener bus has drained)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _reply_oracle(n: int, edges: list[tuple[int, int]], op: int, start: int | None) -> set:
     """Pure-Python reply of one read: BFS ``(id, level)`` pairs, or the DFS
     leaf set (degree <= 1, a non-isolated start excluded) with no level.
@@ -402,8 +415,9 @@ def _reply_oracle(n: int, edges: list[tuple[int, int]], op: int, start: int | No
 def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path, monkeypatch):
     """One mixed micro-batch over a seeded fleet: every read's reply rows
     equal the pure-Python oracle, including the edge cases of today's
-    reply contract.  The batch's writes are folded into one catalog write
-    that keeps the last write (in seq order) per graph."""
+    reply contract.  The batch's writes are folded into one ``put`` call
+    that keeps the last write (in seq order) per graph, and the whole
+    dispatch runs one Spark job: the collect of the batch."""
     import random
 
     from distributed_graph_db_c_spark.catalog import GraphCatalog
@@ -462,12 +476,15 @@ def test_dispatch_mixed_batch_matches_oracle(spark, tmp_path, monkeypatch):
     fleet[9], fleet[10] = replaced, added
     rng.shuffle(rows)  # dispatch orders the batch by seq itself
 
-    writes = []
-    write = cat._write
-    monkeypatch.setattr(cat, "_write", lambda df: writes.append(df) or write(df))
+    puts = []
+    put = cat.put
+    monkeypatch.setattr(cat, "put", lambda graphs: puts.append(graphs) or put(graphs))
     results = str(tmp_path / "results")
-    dispatch_requests(cat, spark.createDataFrame(rows, REQUEST_SCHEMA), results)
-    assert len(writes) == 1  # three writes to two graphs, one catalog write
+    batch = spark.createDataFrame(rows, REQUEST_SCHEMA)
+    jobs = _spark_jobs(spark, "test-dispatch-mixed", lambda: dispatch_requests(cat, batch, results))
+    assert len(puts) == 1  # three writes to two graphs, one put ...
+    assert [g[0] for g in puts[0]] == [9, 9, 10]  # ... given them in seq order
+    assert jobs == 1  # the batch collect; the put and the replies run no job
     # one dispatch call appends one reply file, however many reads it holds
     assert len(list((tmp_path / "results").glob("*.parquet"))) == 1
     stored = {
@@ -576,35 +593,68 @@ def test_dispatch_sees_another_catalogs_writes(spark, tmp_path):
 
 
 def test_serving_frames_run_no_python(spark, tmp_path, monkeypatch):
-    """The frames a served micro-batch builds run inside the JVM: the
-    reply plan holds no Python evaluation node, and neither the request
-    frame nor a write's graph-row frame scans a pickled Python RDD.  The
-    request rows carry their graph rows, so the reply plan scans no file
-    and needs no join or shuffle to attach them."""
+    """The frames a served micro-batch builds run inside the JVM, and
+    neither a write nor a reply runs a Spark job: ``put`` writes on the
+    driver, and each op's reply frame (one row of reply arrays per
+    request, over an Arrow-built request frame that carries its graph
+    rows) is folded by the optimizer into a bare ``LocalTableScan`` — no
+    Python node, scan, join or shuffle — whose collect runs no job."""
     from distributed_graph_db_c_spark.catalog import GraphCatalog
-    from distributed_graph_db_c_spark.streaming.requests import read_replies
+    from distributed_graph_db_c_spark.streaming import requests
 
     def plan(df) -> str:
         return df._jdf.queryExecution().executedPlan().toString()
 
     cat = GraphCatalog(spark, str(tmp_path / "catalog"))
-    cat.put([(1, [1, 2, 3], [(1, 2), (2, 1), (2, 3), (3, 2)])])
-    replies = read_replies(cat, [(1, 4, 1, 1), (2, 3, 1, 1), (3, 4, 9, 2)])
-    written = []
-    monkeypatch.setattr(cat, "_write", written.append)
-    cat.put([(2, [1, 2], [(1, 2), (2, 1)])])
+    assert _spark_jobs(spark, "test-put", lambda: cat.put([(1, [1, 2, 3], [(1, 2), (2, 1), (2, 3), (3, 2)])])) == 0
+    frames = []
+    for seam in ("bfs", "dfs_leaves"):
+        kernel = getattr(requests, seam)
+        monkeypatch.setattr(requests, seam, lambda rows, keys, k=kernel: frames.append(k(rows, keys)) or frames[-1])
+    replies = []
+    reads = [(1, 4, 1, 1), (2, 3, 1, 1), (3, 4, 9, 2)]
+    assert _spark_jobs(spark, "test-replies", lambda: replies.append(requests.read_replies(cat, reads))) == 0
 
-    python_nodes = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF")
-    assert not [n for n in python_nodes if n in plan(replies)], plan(replies)
-    scan_nodes = ("FileScan", "Exchange", "BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin")
-    assert not [n for n in scan_nodes if n in plan(replies)], plan(replies)
-    for df in (replies, *written):
-        assert "ExistingRDD" not in plan(df), plan(df)
-    assert len(written) == 1
-    assert sorted(tuple(r) for r in replies.collect()) == [
+    assert len(frames) == 2  # one per op
+    for df in frames:
+        assert plan(df).splitlines()[0].startswith("LocalTableScan "), plan(df)
+        assert len(plan(df).strip().splitlines()) == 1, plan(df)
+    assert sorted(tuple(r.values()) for r in replies[0].to_pylist()) == [
         (1, 4, 1, 1, 0),
         (1, 4, 1, 2, 1),
         (1, 4, 1, 3, 2),
         (2, 3, 1, 3, None),
         (3, 4, 9, 2, 0),
     ]
+
+
+def test_empty_reply_and_request_files(spark, tmp_path):
+    """A batch whose reads reach no reply row (DFS on a triangle) still
+    publishes its one, empty, reply file, and an empty ``submit`` writes
+    an empty request file: an empty row list is an empty typed table."""
+    from distributed_graph_db_c_spark.catalog import GraphCatalog
+    from distributed_graph_db_c_spark.schemas import arrow_table
+    from distributed_graph_db_c_spark.streaming.requests import (
+        REQUEST_SCHEMA,
+        RESULT_SCHEMA,
+        RequestServer,
+        dispatch_requests,
+    )
+
+    empty = arrow_table([], RESULT_SCHEMA)
+    assert empty.num_rows == 0 and empty.column_names == RESULT_SCHEMA.names
+    cat = GraphCatalog(spark, str(tmp_path / "catalog"))
+    cat.put([(1, [1, 2, 3], [(a, b) for a in (1, 2, 3) for b in (1, 2, 3) if a != b])])
+    results = tmp_path / "results"
+    rows = [(1, 3, 1, None, None, 1), (2, 3, 1, None, None, 2)]
+    dispatch_requests(cat, spark.createDataFrame(rows, REQUEST_SCHEMA), str(results))
+    assert len(list(results.glob("*.parquet"))) == 1
+    assert spark.read.schema(RESULT_SCHEMA).parquet(str(results)).count() == 0
+
+    server = RequestServer(spark, cat, str(tmp_path / "server"))
+    try:
+        server.submit([])
+    finally:
+        server.stop()
+    (req,) = (tmp_path / "server" / "in").glob("*.parquet")
+    assert spark.read.schema(REQUEST_SCHEMA).parquet(str(req)).count() == 0
