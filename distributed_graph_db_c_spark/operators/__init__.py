@@ -1,3 +1,3 @@
-from .traversal import bfs, dfs_leaves, dfs_preorder, connected_components, degrees
+from .traversal import bfs, dfs_preorder, degrees
 
-__all__ = ["bfs", "dfs_leaves", "dfs_preorder", "connected_components", "degrees"]
+__all__ = ["bfs", "dfs_preorder", "degrees"]

@@ -16,28 +16,21 @@ Reference semantics being re-expressed:
   vertices reachable from start with degree <= 1, excluding a non-isolated
   start vertex.  SQL-expressible, deterministic.
 
-Two kernel families, chosen by the caller (nothing counts edges to pick):
+BFS and DFS leaves run as graph-row kernels (``bfs_graph_row_arrays``/
+``dfs_leaves_graph_row_arrays``, and their exploded ``bfs_graph_rows``/
+``dfs_leaves_graph_rows``): each start row carries its whole graph as one
+``edges`` array — the serving path attaches the catalog's stored rows,
+analytics callers fold an edge frame with ``graph_rows`` (one
+``groupBy``) — and the traversal is SQL higher-order-function expressions
+on that row: no supersteps and no Python worker.  The reference's regime:
+one loaded graph traversed in-process (secondary_server.c:463-501).
 
-- Graph-row kernels (``bfs_graph_row_arrays``/
-  ``dfs_leaves_graph_row_arrays``, and their exploded ``bfs_graph_rows``/
-  ``dfs_leaves_graph_rows``): each start row carries its whole graph as
-  one ``edges`` array — the serving path attaches the catalog's stored
-  rows, analytics callers fold an edge frame with ``graph_rows`` (one
-  ``groupBy``) — and the traversal is SQL higher-order-function
-  expressions on that row: no supersteps and no Python worker.  The
-  reference's regime: one loaded graph traversed in-process
-  (secondary_server.c:463-501).
-- Iterative superstep kernels (``bfs``, ``dfs_leaves``,
-  ``connected_components``, ``pagerank``, ``sssp``, ``kcore``): the
-  textbook BSP/Pregel loop (GraphX, OSDI'14) as DataFrame ops, one
-  equi-join + anti-join per superstep with the shuffle as the barrier,
-  for a graph too big for one row.  They are also the test references for
-  the in-task kernels.  ``localCheckpoint`` every few supersteps truncates
-  lineage.
-
-The ``*_fleet`` kernels (PageRank, CC, SSSP, k-core) still walk each
-graph in one pandas task; on large rows with arbitrary ids they need a
+The ``*_fleet`` kernels (PageRank, CC, SSSP, k-core) walk each graph in
+one pandas task; on large rows with arbitrary ids they need a
 position-indexed adjacency row before they can join the graph-row family.
+No BFS, DFS-leaf, CC, PageRank, SSSP or k-core kernel here serves a graph
+too big for one row or one task.  ``toposort_levels`` and
+``forest_roots`` are superstep loops over an edge frame of any size.
 """
 
 from __future__ import annotations
@@ -74,6 +67,8 @@ def _partitioned_adj(edges: DataFrame) -> DataFrame:
     return adj.repartition(n_part, "graph_id", "id").persist()
 
 
+# No engine code calls this superstep BFS; it stays because perfbench's
+# traced run patches ``traversal.bfs`` by name (``perfbench/run.py``).
 def bfs(
     edges: DataFrame,
     starts: DataFrame,
@@ -155,27 +150,6 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def dfs_leaves(edges: DataFrame, starts: DataFrame) -> DataFrame:
-    """Reference op 3, canonical semantics (SURVEY.md §2.1): vertices
-    reachable from the start with degree <= 1, excluding a non-isolated
-    start vertex.  Matches the reference's emitted set on every fixture.
-
-    Pure DataFrame composition: reachability (BFS kernel) + degree
-    left-join + filter — no Python in the hot path.
-    """
-    reachable = bfs(edges, starts).select("graph_id", "id", "level")
-    deg = degrees(edges)
-    return (
-        reachable.join(deg, on=["graph_id", "id"], how="left")
-        .withColumn("degree", F.coalesce(F.col("degree"), F.lit(0)))
-        .filter(
-            (F.col("degree") <= 1)
-            & ~((F.col("level") == 0) & (F.col("degree") >= 1))  # non-isolated start excluded
-        )
-        .select("graph_id", "id")
-    )
-
-
 def dfs_preorder(edges: DataFrame, starts: DataFrame) -> DataFrame:
     """Sequential DFS preorder per graph, neighbours visited in ascending id
     (the deterministic canonicalization of the reference's thread-racing DFS,
@@ -187,7 +161,7 @@ def dfs_preorder(edges: DataFrame, starts: DataFrame) -> DataFrame:
     (reference: one server thread per request — same shape).  Only suitable
     for graphs that fit in one executor's memory; the reference caps graphs
     at 30 nodes (client.c:15), ours comfortably handles millions of edges
-    per graph before this needs the big-graph reachability path instead.
+    per graph.
 
     Returns (graph_id, id, pos) with pos = 0-based preorder position.
     """
@@ -236,92 +210,6 @@ def dfs_preorder(edges: DataFrame, starts: DataFrame) -> DataFrame:
     return grouped.groupBy("graph_id").applyInPandas(
         run_dfs, schema="graph_id int, id long, pos long"
     )
-
-
-def connected_components(edges: DataFrame, vertices: DataFrame, max_iters: int = 50) -> DataFrame:
-    """Connected components by iterative min-label propagation (the classic
-    Pregel formulation): every vertex starts labelled with its own id; each
-    superstep every vertex takes the min of its own and its neighbours'
-    labels; converged when the global label sum stops changing (one cheap
-    scalar aggregate per superstep — no full comparison join).
-
-    Returns (graph_id, id, component) with component = min vertex id in the
-    component.
-    """
-    adj = _partitioned_adj(edges)
-    labels = vertices.select("graph_id", "id", F.col("id").alias("component"))
-    prev_sum = None
-    for i in range(max_iters):
-        msgs = labels.join(adj, on=["graph_id", "id"]).select(
-            "graph_id", F.col("nb").alias("id"), "component"
-        )
-        labels = (
-            labels.unionByName(msgs)
-            .groupBy("graph_id", "id")
-            .agg(F.min("component").alias("component"))
-        )
-        # Materialize every superstep: the convergence aggregate below would
-        # otherwise recompute the un-checkpointed lineage, and the next
-        # superstep would recompute it again.
-        labels = labels.localCheckpoint(eager=True)
-        cur_sum = labels.agg(F.sum("component")).head()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    labels = labels.localCheckpoint(eager=True)
-    adj.unpersist()
-    return labels
-
-
-def pagerank(
-    edges: DataFrame,
-    vertices: DataFrame,
-    iterations: int = 10,
-    scale: int = 10**12,
-) -> DataFrame:
-    """PageRank with damping 0.85, fixed iteration count, INTEGER
-    fixed-point arithmetic (ranks scaled by 10^12, floor division) — so
-    the result is bit-identical under any partitioning, any engine, any
-    summation order (integer addition is associative; no FP drift).
-
-    The classic Pregel formulation (GraphX paper): one join + groupBy-sum
-    per superstep; contributions r(u)//deg(u) flow along edges.  Vertices
-    with no in-edges settle at the teleport base.  Returns
-    (graph_id, id, rank_scaled) with rank ~ rank_scaled / 10^12.
-    """
-    adj = _partitioned_adj(edges)
-    deg = adj.groupBy("graph_id", "id").agg(F.count("*").alias("degree"))
-    # Key-partitioned like adj (join of two key-partitioned sides), so each
-    # superstep's contribution join shuffles only the ranks side.
-    adj_deg = adj.join(deg, on=["graph_id", "id"]).persist()
-    base = vertices.join(
-        vertices.groupBy("graph_id").agg(F.count("*").alias("n_g")), on="graph_id"
-    ).persist()
-
-    ranks = base.select(
-        "graph_id", "id", F.expr(f"CAST({scale} AS BIGINT) DIV n_g").alias("r")
-    )
-    for i in range(iterations):
-        contrib = ranks.join(adj_deg, on=["graph_id", "id"]).select(
-            "graph_id", F.col("nb").alias("id"), F.expr("r DIV degree").alias("c")
-        )
-        sums = contrib.groupBy("graph_id", "id").agg(F.sum("c").alias("s"))
-        ranks = base.join(sums, on=["graph_id", "id"], how="left").select(
-            "graph_id",
-            "id",
-            F.expr(
-                f"CAST({15 * scale} AS BIGINT) DIV (100 * n_g)"
-                " + (85 * coalesce(s, CAST(0 AS BIGINT))) DIV 100"
-            ).alias("r"),
-        )
-        if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    ranks = ranks.select("graph_id", "id", F.col("r").alias("rank_scaled"))
-    ranks = ranks.localCheckpoint(eager=True)
-    adj_deg.unpersist()
-    adj.unpersist()
-    base.unpersist()
-    return ranks
 
 
 # BFS over one graph row, as one SQL expression: each ``aggregate`` step
@@ -409,8 +297,8 @@ def bfs_graph_row_arrays(rows: DataFrame, keys: list[str]) -> DataFrame:
 
 
 def bfs_graph_rows(rows: DataFrame, keys: list[str]) -> DataFrame:
-    """:func:`bfs_graph_row_arrays` exploded: ``keys`` + (id, level), the
-    same rows :func:`bfs` gives per start."""
+    """:func:`bfs_graph_row_arrays` exploded: ``keys`` + (id, level), one
+    row per vertex reached, at its hop count from the start."""
     return bfs_graph_row_arrays(rows, keys).select(*keys, F.inline(F.arrays_zip("id", "level")))
 
 
@@ -423,7 +311,8 @@ def _walk_with_hubs(rows: DataFrame, keys: list[str]) -> DataFrame:
 
 
 def dfs_leaves_graph_row_arrays(rows: DataFrame, keys: list[str]) -> DataFrame:
-    """Row-local :func:`dfs_leaves` over the same input as
+    """Row-local DFS leaf report (reference op 3, canonical semantics
+    above) over the same input as
     :func:`bfs_graph_row_arrays`, one output row per start row: ``keys`` +
     (id array<bigint>, level), ``level`` NULL.  A graph with no leaf
     reachable from the start (a triangle) yields ``id = []``."""
@@ -450,13 +339,13 @@ def pagerank_fleet(
     iterations: int = 10,
     scale: int = 10**12,
 ) -> DataFrame:
-    """Fleet-mode PageRank: the cogrouped in-task twin of :func:`pagerank`
-    for many small graphs: each graph's edge list and vertex set reach ONE
-    task as Arrow batches, so the loop runs with no supersteps.
-    The integer fixed-point recurrence is replayed verbatim with Python
-    ints (arbitrary precision, same floor division), so results are
-    BIT-IDENTICAL to the iterative-join kernel — pinned by the
-    kernel-agreement property test."""
+    """Fleet-mode PageRank with damping 0.85, fixed iteration count and
+    INTEGER fixed-point arithmetic (ranks scaled by ``scale``, floor
+    division), so the result is bit-identical under any partitioning or
+    summation order.  Each graph's edge list and vertex set reach ONE task
+    as Arrow batches, so the loop runs with no supersteps.  Vertices with
+    no in-edges settle at the teleport base.  Returns
+    (graph_id, id, rank_scaled) with rank ~ rank_scaled / scale."""
 
     def run_pr(edges_pdf: pd.DataFrame, verts_pdf: pd.DataFrame) -> pd.DataFrame:
         if verts_pdf.empty:
@@ -491,8 +380,7 @@ def pagerank_fleet(
 
 def connected_components_fleet(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """Fleet-mode connected components: in-task union-find per graph
-    (cogrouped Arrow batches), labels = min vertex id per component —
-    identical semantics to the min-label-propagation kernel."""
+    (cogrouped Arrow batches), labels = min vertex id per component."""
 
     def run_cc(edges_pdf: pd.DataFrame, verts_pdf: pd.DataFrame) -> pd.DataFrame:
         if verts_pdf.empty:
@@ -529,88 +417,13 @@ def connected_components_fleet(edges: DataFrame, vertices: DataFrame) -> DataFra
     )
 
 
-def sssp(
-    edges: DataFrame,
-    starts: DataFrame,
-    broadcast_threshold: int = 1_000_000,
-) -> DataFrame:
-    """Weighted single-source (per graph: multi-source) shortest paths —
-    BFS generalized from hop counts to NON-NEGATIVE INTEGER edge weights
-    (integer so distances are bit-exact under any partitioning; scale real
-    weights to fixed-point like :func:`pagerank` does ranks).
-
-    Args:
-      edges:  (graph_id, src, dst, w) with both directions materialized
-              and w >= 0 (long).
-      starts: (graph_id, id).
-    Returns:
-      (graph_id, id, dist) for every reachable vertex, dist = min total
-      weight; starts at 0.
-
-    The frontier-relaxation Bellman-Ford (delta-stepping's degenerate
-    form): each superstep relaxes only edges out of vertices whose
-    distance IMPROVED last superstep, so settled regions stop costing
-    anything — on non-negative weights the improved set empties within
-    V-1 supersteps (typically ~weighted diameter).  Same shuffle budget
-    as :func:`bfs`: adjacency shuffled once into the persisted key
-    partitioning, frontier broadcast while small, one equi-join + one
-    min-aggregate per superstep."""
-    adj = edges.select(
-        "graph_id", F.col("src").alias("id"), F.col("dst").alias("nb"), F.col("w")
-    )
-    n_edges = adj.count()
-    n_part = min(n_edges // _ADJ_ROWS_PER_PARTITION + 1, _ADJ_MAX_PARTITIONS)
-    adj = adj.repartition(n_part, "graph_id", "id").persist()
-
-    dist = (
-        starts.select("graph_id", F.col("id").cast("long").alias("id"))
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    f_cnt = frontier.count()
-    d_cnt = f_cnt
-    while f_cnt > 0:
-        f_side = F.broadcast(frontier) if f_cnt <= broadcast_threshold else frontier
-        cand = (
-            f_side.join(adj, on=["graph_id", "id"])
-            .select(
-                "graph_id",
-                F.col("nb").alias("id"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            .groupBy("graph_id", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        cur = dist.select("graph_id", "id", F.col("dist").alias("_old"))
-        c_side = F.broadcast(cur) if d_cnt <= broadcast_threshold else cur
-        improved = (
-            cand.join(c_side, on=["graph_id", "id"], how="left")
-            .filter(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-            .select("graph_id", "id", "dist")
-            .localCheckpoint(eager=True)
-        )
-        f_cnt = improved.count()
-        if f_cnt == 0:
-            break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("graph_id", "id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        d_cnt = dist.count()
-        frontier = improved
-    adj.unpersist()
-    return dist
-
-
 def sssp_fleet(edges: DataFrame, starts: DataFrame) -> DataFrame:
-    """Fleet-mode SSSP: per-graph Dijkstra (binary heap) in a cogrouped
-    Arrow task — the many-tiny-graphs twin of :func:`sssp`, with no
-    supersteps.  Python ints, so distances are exact
-    and BIT-IDENTICAL to the iterative kernel (kernel-agreement property
-    test)."""
+    """Weighted single-source (per graph: multi-source) shortest paths:
+    per-graph Dijkstra (binary heap) in a cogrouped Arrow task, with no
+    supersteps.  ``edges`` is (graph_id, src, dst, w) with both directions
+    materialized and NON-NEGATIVE INTEGER w; ``starts`` is (graph_id, id).
+    Returns (graph_id, id, dist) for every reachable vertex, dist = min
+    total weight, starts at 0.  Python ints, so distances are exact."""
     import heapq
 
     def run_sssp(edges_pdf: pd.DataFrame, starts_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -917,71 +730,16 @@ def forest_roots(
     return out.select("graph_id", "id", "root")
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    max_iter: int | None = None,
-) -> DataFrame:
-    """K-CORE decomposition by iterative peeling: repeatedly drop
-    vertices with degree < k until the fixpoint; return the surviving
-    vertices with their degree INSIDE the core as ``(id, core_degree)``.
-
-    ``edges`` must carry both directions of each undirected edge as
-    ``(u, v)`` rows.  Each round is one semi-join restriction + one
-    partial-agg degree count over the CURRENT subgraph — work shrinks
-    monotonically as vertices peel, and the round count is the peeling
-    depth of the graph (bounded by max degree layers, NOT |V|, on the
-    dense-community graphs k-core targets; a chain is the adversarial
-    case and peels in O(|V|/2) rounds — use the fleet kernel for
-    path-shaped graphs).  ``localCheckpoint`` truncates the growing
-    lineage each round, the same discipline as ``bfs``.
-
-    The termination test is a count() comparison: keep ⊆ alive always
-    holds, so equal counts imply the fixpoint — one cheap action per
-    round instead of a subtract.
-
-    ``max_iter`` None derives the round cap from the alive count taken
-    before the first round: each round removes at least one vertex or
-    reaches the fixpoint, so ``n_alive + 1`` rounds never fire before
-    convergence (a deep-peeling path graph converges instead of dying on
-    a fixed cap).  50 stays the floor, so a tiny graph keeps a loud
-    runaway-bug detector.
-
-    No reference citation: the reference's graph surface is 4 traversal
-    ops (SURVEY.md §2.1); k-core is driver-mandated extension surface
-    (graph analytics beyond parity, §2.3)."""
-    alive = edges.select(F.col("u").alias("id")).distinct().localCheckpoint(
-        eager=True
-    )
-    n_alive = alive.count()
-    if max_iter is None:
-        max_iter = max(50, n_alive + 1)
-    for _ in range(max_iter):
-        sub = edges.join(alive.select(F.col("id").alias("u")), "u", "left_semi").join(
-            alive.select(F.col("id").alias("v")), "v", "left_semi"
-        )
-        deg = sub.groupBy("u").agg(F.count("*").alias("core_degree"))
-        keep = deg.filter(F.col("core_degree") >= k).localCheckpoint(eager=True)
-        n_keep = keep.count()
-        if n_keep == n_alive:
-            return keep.select(F.col("u").alias("id"), "core_degree")
-        alive = keep.select(F.col("u").alias("id"))
-        n_alive = n_keep
-        if n_alive == 0:
-            return keep.select(F.col("u").alias("id"), "core_degree")
-    raise RuntimeError(f"kcore: no fixpoint within {max_iter} rounds")
-
-
 def kcore_fleet(edges: DataFrame, k: int) -> DataFrame:
     """In-task k-core: the whole graph peels inside ONE Arrow kernel via
     the linear-time bucket algorithm (Matula–Beck degeneracy peeling:
     maintain degrees, repeatedly delete any vertex whose degree dropped
     below k — a worklist, not global rounds), so peel DEPTH costs
-    nothing.  The iterative :func:`kcore` pays ~1 s of job overhead per
-    peeling round; on graphs that fit one task (the co-purchase graph at
-    sf0.1 peels ~15 rounds) this kernel is an order of magnitude faster
-    — whole graph in one task, no supersteps.  Requires the edge list to
-    fit one task's memory; the co-purchase query calls it directly."""
+    nothing (the co-purchase graph at sf0.1 would need ~15 global
+    rounds).  ``edges`` carries both directions of each undirected edge
+    as ``(u, v)`` rows; returns the surviving vertices with their degree
+    INSIDE the core as ``(id, core_degree)``.  Requires the edge list to
+    fit one task's memory."""
 
     def peel(pdf: pd.DataFrame) -> pd.DataFrame:
         adj: dict[int, list[int]] = {}

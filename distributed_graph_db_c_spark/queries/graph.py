@@ -284,8 +284,8 @@ def graph_triangle_count_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pagerank_sql(iterations: int = 10, scale: int = 10**12) -> str:
     """Unrolled fixed-point PageRank oracle: one CTE per iteration (DuckDB
     recursive CTEs cannot aggregate in the recursive member, so unroll).
-    Same integer arithmetic as operators.traversal.pagerank: // is floor
-    division, identical to Spark's DIV on non-negative operands."""
+    Same integer arithmetic as operators.traversal.pagerank_fleet: // is
+    floor division, identical to Python's // on non-negative operands."""
     ctes = [
         """e AS (
     SELECT a.n_nationkey AS src, b.n_nationkey AS dst
@@ -319,7 +319,7 @@ base AS (SELECT n_nationkey AS id, (SELECT COUNT(*) FROM nation) AS n_g FROM nat
 @register("graph_pagerank_nations", oracle=_pagerank_sql())
 def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, 10 iterations, integer fixed-point — see
-    operators.traversal.pagerank) over the same-region nation graph."""
+    operators.traversal.pagerank_fleet) over the same-region nation graph."""
     from ..operators.traversal import pagerank_fleet
 
     nation = load_table(spark, sf_dir, "nation")
@@ -327,7 +327,7 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("graph_id"), F.col("n_nationkey").cast("long").alias("id")
     )
     edges = nation_edges(spark, sf_dir)
-    # in-task kernel, bit-identical to the iterative pagerank (property test)
+    # in-task kernel; tests/test_properties.py pins it == a Python reference
     return pagerank_fleet(edges, vertices).select("id", "rank_scaled")
 
 
@@ -402,14 +402,14 @@ FROM cum
 
 @register("graph_sssp_order_chain", oracle=_SSSP_SQL)
 def graph_sssp_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted single-source shortest paths (operators/traversal.sssp):
+    """Weighted single-source shortest paths (operators/traversal.sssp_fleet):
     BFS generalized to non-negative integer weights — here the day gaps
     between a customer's consecutive orders.  The start (customer 1's
     MIN o_orderkey) can sit MID-chain, so the traversal genuinely relaxes
     in both directions; on a path graph the true distance is the
     |cumulative-gap difference|, which is what the window-sum oracle
-    computes.  In-task Dijkstra (:func:`sssp_fleet`); the
-    frontier-relaxation :func:`sssp` is its property-test reference."""
+    computes.  In-task Dijkstra; a Python Dijkstra is its property-test
+    reference."""
     from ..operators.traversal import sssp_fleet
 
     orders = load_table(spark, sf_dir, "orders")
@@ -608,18 +608,17 @@ def graph_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     in which every part is co-purchased (same order, support >= 2) with
     at least k=2 other core parts — the dense-community extraction that
     prunes tendrils and leaves the stable product neighborhoods
-    (operators/traversal.kcore, iterative peeling with per-round
-    lineage truncation).
+    (operators/traversal.kcore_fleet, in-task bucket peeling).
 
     CORPUS-CONTINGENT ORACLE: peeling is not expressible as a single
     recursive CTE (aggregation in the recursive term), so the oracle
     UNROLLS 6 peeling rounds — exact while the gate corpus converges
     within 6 (measured: 4 at sf0.01; extra rounds are idempotent).
-    The operator itself runs to the true fixpoint at any scale; the
-    pytest differential against a reference peeler covers graphs the
-    unrolled oracle can't.  The graph fits one task (7,706 edges at
-    sf0.1), so the linear-time in-task bucket peel runs: peel depth is
-    free (the sf0.1 graph needs ~15 rounds of the per-round loop)."""
+    The operator itself runs to the true fixpoint; the pytest
+    differential against a reference peeler covers graphs the unrolled
+    oracle can't.  The graph must fit one task (7,706 edges at sf0.1);
+    the linear-time bucket peel makes peel depth free (the sf0.1 graph
+    would need ~15 global peeling rounds)."""
     from ..operators.traversal import kcore_fleet
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")

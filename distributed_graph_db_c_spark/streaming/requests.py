@@ -210,13 +210,14 @@ class RequestServer:
             .trigger(processingTime=poll)
             .start()
         )
-        self._n = 0
 
     def submit(self, rows: list) -> None:
         """Enqueue one request batch (list of REQUEST_SCHEMA-shaped rows)
-        as a single file — one micro-batch on the server side."""
-        _publish(arrow_table(rows, REQUEST_SCHEMA), self.in_dir, f"req{self._n:06d}.parquet")
-        self._n += 1
+        as a single file — one micro-batch on the server side.  The file
+        name is unique, so a server restarted on the same root never reuses
+        a name its checkpoint has seen; the file source takes new files in
+        modification-time order."""
+        _publish(arrow_table(rows, REQUEST_SCHEMA), self.in_dir, f"req-{uuid.uuid4().hex}.parquet")
 
     def replies(self, seq: int | None = None) -> DataFrame:
         """Reply view, correlated by seq — a plain DataFrame over the

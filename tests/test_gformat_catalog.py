@@ -79,7 +79,11 @@ def test_read_gformat_dir_bulk_ingest(spark, tmp_path):
     """The reference's database bootstrap: a directory of G<i>.txt files
     (primary_server.c:49-59 naming) ingested in ONE call, graph identity
     from the filename; traversal results identical to per-file ingest."""
-    from distributed_graph_db_c_spark.operators.traversal import bfs, dfs_leaves
+    from distributed_graph_db_c_spark.operators.traversal import (
+        bfs,
+        dfs_leaves_graph_rows,
+        graph_rows,
+    )
 
     gdir = tmp_path / "db"
     gdir.mkdir()
@@ -117,7 +121,8 @@ def test_read_gformat_dir_bulk_ingest(spark, tmp_path):
     levels = {r["id"]: r["level"] for r in bfs(cat.edges(1), start).collect()}
     assert levels == {1: 0, 2: 1, 3: 2, 4: 3, 5: 3}
     # G1 DFS leaves from 1: degree<=1 reachable, non-isolated start excluded
-    leaves = {r["id"] for r in dfs_leaves(cat.edges(1), start).collect()}
+    rows = graph_rows(cat.edges(1), start)
+    leaves = {r["id"] for r in dfs_leaves_graph_rows(rows, ["graph_id"]).collect()}
     assert leaves == {4, 5}
 
 

@@ -5,9 +5,10 @@ reference.  Properties:
 
 - BFS level of v == shortest-path hop count (python BFS)
 - BFS visited set == connected component of the start
-- dfs_leaves == reachable vertices with degree <= 1, minus non-isolated
+- DFS leaves == reachable vertices with degree <= 1, minus non-isolated
   start (the canonical semantics of SURVEY.md §2.1)
-- connected_components labels == python union-find components
+- connected-component labels == python BFS components
+- PageRank, SSSP: == integer Python references
 """
 
 from __future__ import annotations
@@ -20,10 +21,11 @@ import pyspark.sql.functions as F
 from distributed_graph_db_c_spark.operators.traversal import (
     bfs,
     bfs_graph_rows,
-    connected_components,
-    dfs_leaves,
+    connected_components_fleet,
     dfs_leaves_graph_rows,
     graph_rows,
+    pagerank_fleet,
+    sssp_fleet,
 )
 from distributed_graph_db_c_spark.schemas import GRAPH_EDGES_SCHEMA, GRAPH_VERTICES_SCHEMA
 
@@ -130,10 +132,7 @@ def test_dfs_leaves_random_fleet(spark):
     fleet = _random_fleet()
     edges_df, _, starts_df = _fleet_dfs(spark, fleet)
     rows = graph_rows(edges_df, starts_df)
-    got_iter = [(r["graph_id"], r["id"]) for r in dfs_leaves(edges_df, starts_df).collect()]
-    got_rows = [
-        (r["graph_id"], r["id"]) for r in dfs_leaves_graph_rows(rows, ["graph_id"]).collect()
-    ]
+    got = [(r["graph_id"], r["id"]) for r in dfs_leaves_graph_rows(rows, ["graph_id"]).collect()]
     want = set()
     for gid, n, edges, start in fleet:
         adj = _adj(n, edges)
@@ -142,9 +141,8 @@ def test_dfs_leaves_random_fleet(spark):
             deg = len(adj[v])
             if deg <= 1 and not (v == start and deg >= 1):
                 want.add((gid, v))
-    for name, got in (("iterative", got_iter), ("graph rows", got_rows)):
-        assert len(got) == len(want), name  # each leaf once
-        assert set(got) == want, name
+    assert len(got) == len(want)  # each leaf once
+    assert set(got) == want
 
 
 def test_connected_components_random_fleet(spark):
@@ -152,7 +150,7 @@ def test_connected_components_random_fleet(spark):
     edges_df, verts_df, _ = _fleet_dfs(spark, fleet)
     got = {
         (r["graph_id"], r["id"]): r["component"]
-        for r in connected_components(edges_df, verts_df).collect()
+        for r in connected_components_fleet(edges_df, verts_df).collect()
     }
     want = {
         (gid, v): c
@@ -162,41 +160,36 @@ def test_connected_components_random_fleet(spark):
     assert got == want
 
 
-def test_pagerank_fleet_kernel_bit_identical_to_iterative(spark):
-    """Integer fixed-point makes the two PageRank kernels comparable with
-    == (no FP tolerance): same scaled ranks on a random fleet."""
-    from distributed_graph_db_c_spark.operators.traversal import pagerank, pagerank_fleet
+def _py_pagerank(n, edges, iterations=10, scale=10**12):
+    """Integer fixed-point PageRank, the arithmetic of ``_pagerank_sql``:
+    r0 = scale // n, then each round 15*scale // (100*n) + 85*S // 100,
+    S = the sum of r(u) // deg(u) over the in-neighbours u."""
+    adj = _adj(n, edges)
+    r = {v: scale // n for v in adj}
+    for _ in range(iterations):
+        r = {
+            v: 15 * scale // (100 * n) + 85 * sum(r[u] // len(adj[u]) for u in adj[v]) // 100
+            for v in adj
+        }
+    return r
 
+
+def test_pagerank_fleet_matches_integer_reference(spark):
+    """Integer fixed-point makes PageRank comparable with == (no FP
+    tolerance): the fleet kernel's scaled ranks on a random fleet equal
+    the pure-Python integer recurrence."""
     fleet = _random_fleet()
     edges_df, verts_df, _ = _fleet_dfs(spark, fleet)
-    got_fleet = {
+    got = {
         (r["graph_id"], r["id"]): r["rank_scaled"]
         for r in pagerank_fleet(edges_df, verts_df).collect()
     }
-    got_iter = {
-        (r["graph_id"], r["id"]): r["rank_scaled"]
-        for r in pagerank(edges_df, verts_df).collect()
+    want = {
+        (gid, v): rank
+        for gid, n, edges, _ in fleet
+        for v, rank in _py_pagerank(n, edges).items()
     }
-    assert got_fleet == got_iter
-
-
-def test_cc_fleet_kernel_agrees_with_iterative(spark):
-    from distributed_graph_db_c_spark.operators.traversal import (
-        connected_components,
-        connected_components_fleet,
-    )
-
-    fleet = _random_fleet()
-    edges_df, verts_df, _ = _fleet_dfs(spark, fleet)
-    got_fleet = {
-        (r["graph_id"], r["id"]): r["component"]
-        for r in connected_components_fleet(edges_df, verts_df).collect()
-    }
-    got_iter = {
-        (r["graph_id"], r["id"]): r["component"]
-        for r in connected_components(edges_df, verts_df).collect()
-    }
-    assert got_fleet == got_iter
+    assert got == want
 
 
 def _random_weighted_fleet():
@@ -246,15 +239,13 @@ def _weighted_fleet_dfs(spark, fleet):
 
 
 def test_sssp_random_weighted_fleet(spark):
-    """sssp distances == python Dijkstra on every graph of a random
+    """sssp_fleet distances == python Dijkstra on every graph of a random
     weighted fleet (zero-weight edges included — min, not hop count)."""
-    from distributed_graph_db_c_spark.operators.traversal import sssp
-
     fleet = _random_weighted_fleet()
     edges_df, starts_df = _weighted_fleet_dfs(spark, fleet)
     got = {
         (r["graph_id"], r["id"]): r["dist"]
-        for r in sssp(edges_df, starts_df).collect()
+        for r in sssp_fleet(edges_df, starts_df).collect()
     }
     want = {
         (gid, v): d
@@ -262,22 +253,6 @@ def test_sssp_random_weighted_fleet(spark):
         for v, d in _py_dijkstra(n, wedges, start).items()
     }
     assert got == want
-
-
-def test_sssp_fleet_kernel_agrees_with_iterative(spark):
-    from distributed_graph_db_c_spark.operators.traversal import sssp, sssp_fleet
-
-    fleet = _random_weighted_fleet()
-    edges_df, starts_df = _weighted_fleet_dfs(spark, fleet)
-    got_fleet = {
-        (r["graph_id"], r["id"]): r["dist"]
-        for r in sssp_fleet(edges_df, starts_df).collect()
-    }
-    got_iter = {
-        (r["graph_id"], r["id"]): r["dist"]
-        for r in sssp(edges_df, starts_df).collect()
-    }
-    assert got_fleet == got_iter
 
 
 def test_bm25_saturates_tf_and_normalizes_length(spark, tmp_path):

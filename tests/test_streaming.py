@@ -178,6 +178,32 @@ def test_request_server_online_loop(spark):
         cleanup(scratch)
 
 
+def test_request_server_restart_serves_new_requests(spark, tmp_path):
+    """A server restarted on the same root (same checkpoint) serves a
+    request submitted after the restart: the new request file must not
+    reuse a name the checkpoint has already seen."""
+    from distributed_graph_db_c_spark.catalog import GraphCatalog
+    from distributed_graph_db_c_spark.streaming.requests import RequestServer
+
+    cat = GraphCatalog(spark, str(tmp_path / "catalog"))
+    root = str(tmp_path / "server")
+    server = RequestServer(spark, cat, root)
+    try:
+        server.submit([(1, 1, 5, [1, 2, 3], [(1, 2), (2, 3)], None), (2, 4, 5, None, None, 1)])
+        assert len(server.await_reply(2).collect()) == 3
+    finally:
+        server.stop()
+
+    server = RequestServer(spark, cat, root)
+    try:
+        server.submit([(3, 4, 5, None, None, 3)])
+        got = {row["id"]: row["level"] for row in server.await_reply(3, 30).collect()}
+    finally:
+        server.stop()
+    assert got == {3: 0, 2: 1, 1: 2}
+    assert len(list((tmp_path / "server" / "in").glob("*.parquet"))) == 2
+
+
 def test_incremental_minhash_equals_batch(spark):
     """The streaming LSH index must find EXACTLY the batch operator's
     pairs regardless of batch boundaries, and a replayed (duplicate)

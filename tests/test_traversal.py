@@ -8,10 +8,11 @@ import pytest
 
 from distributed_graph_db_c_spark.operators.traversal import (
     bfs,
-    connected_components,
+    connected_components_fleet,
     degrees,
-    dfs_leaves,
+    dfs_leaves_graph_rows,
     dfs_preorder,
+    graph_rows,
 )
 from distributed_graph_db_c_spark.schemas import GRAPH_VERTICES_SCHEMA
 
@@ -42,6 +43,10 @@ def _starts(spark, pairs):
     return spark.createDataFrame(pairs, GRAPH_VERTICES_SCHEMA)
 
 
+def _dfs_leaves(edges, starts):
+    return dfs_leaves_graph_rows(graph_rows(edges, starts), ["graph_id"])
+
+
 def test_bfs_all_fixtures_at_once(spark, fixture_graphs):
     edges, _ = fixture_graphs
     pairs = [(gid, start) for gid, d in BFS_EXPECTED.items() for start in d if start == 1]
@@ -66,7 +71,7 @@ def test_bfs_nonunit_start(spark, fixture_graphs):
 def test_dfs_leaves_all_fixtures(spark, fixture_graphs):
     edges, _ = fixture_graphs
     pairs = [(gid, 1) for gid in DFS_LEAVES_EXPECTED]
-    result = dfs_leaves(edges, _starts(spark, pairs))
+    result = _dfs_leaves(edges, _starts(spark, pairs))
     got = {}
     for r in result.collect():
         got.setdefault(r["graph_id"], set()).add(r["id"])
@@ -77,10 +82,10 @@ def test_dfs_leaves_all_fixtures(spark, fixture_graphs):
 def test_dfs_leaves_isolated_vs_degree1_start(spark, fixture_graphs):
     edges, _ = fixture_graphs
     # G14 start 2 (isolated): start IS a leaf.
-    result = dfs_leaves(edges, _starts(spark, [(14, 2)]))
+    result = _dfs_leaves(edges, _starts(spark, [(14, 2)]))
     assert {r["id"] for r in result.collect()} == {2}
     # G16 start 1 (degree 1, non-isolated): start NOT a leaf; only far end.
-    result = dfs_leaves(edges, _starts(spark, [(16, 1)]))
+    result = _dfs_leaves(edges, _starts(spark, [(16, 1)]))
     assert {r["id"] for r in result.collect()} == {6}
 
 
@@ -113,7 +118,7 @@ def test_degrees(spark, fixture_graphs):
 
 def test_connected_components(spark, fixture_graphs):
     edges, vertices = fixture_graphs
-    labels = connected_components(edges, vertices)
+    labels = connected_components_fleet(edges, vertices)
     # G14 (edgeless, 3 vertices) -> 3 components
     g14 = {r["id"]: r["component"] for r in labels.filter(F.col("graph_id") == 14).collect()}
     assert g14 == {1: 1, 2: 2, 3: 3}
@@ -306,14 +311,14 @@ def _py_kcore(edges: list[tuple[int, int]], k: int) -> dict[int, int]:
 
 
 def test_kcore_matches_reference_peeler(spark):
-    """Distributed peeling vs the in-memory reference on deterministic
+    """In-task bucket peeling vs the in-memory reference on deterministic
     pseudo-random graphs, including a k that empties the core and the
     slow-peeling chain shape."""
     import hashlib
 
     import pyspark.sql.functions as F
 
-    from distributed_graph_db_c_spark.operators.traversal import kcore
+    from distributed_graph_db_c_spark.operators.traversal import kcore_fleet
 
     def h(i: int, j: int) -> int:
         return int.from_bytes(hashlib.md5(f"{i}:{j}".encode()).digest()[:4], "big")
@@ -328,40 +333,15 @@ def test_kcore_matches_reference_peeler(spark):
         }
     )
     chain = [(i, i + 1) for i in range(20)]
-    from distributed_graph_db_c_spark.operators.traversal import kcore_fleet
 
     for elist, k in [(edges, 2), (edges, 3), (edges, 5), (chain, 2)]:
         ref = _py_kcore(elist, k)
         df = spark.createDataFrame(elist, "u int, v int")
         und = df.unionAll(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # kernel agreement: distributed per-round peeling AND the
-        # in-task bucket peel must both match the reference
-        got = {r["id"]: r["core_degree"] for r in kcore(und, k=k).collect()}
-        assert got == ref, ("iterative", k, len(got), len(ref))
         fleet = {
             r["id"]: r["core_degree"] for r in kcore_fleet(und, k=k).collect()
         }
         assert fleet == ref, ("fleet", k, len(fleet), len(ref))
-
-
-def test_kcore_auto_threads_max_iter_to_distributed_path(spark):
-    """ADVICE r6: a deep-peeling chain must CONVERGE through the
-    distributed kcore loop, not die on a fixed 50-round cap.  A
-    120-vertex path graph peels ~60 rounds at k=2 (both endpoints shed
-    each round); with no ``max_iter`` the cap derives from the alive
-    count, so kcore must return the correct (empty — a path has no
-    2-core) result instead of raising."""
-    from distributed_graph_db_c_spark.operators.traversal import kcore
-
-    n = 120
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "u long, v long"
-    )
-    und = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    assert kcore(und, k=2).collect() == []  # a path graph has no 2-core
-    # an explicit max_iter still applies (and a too-small one raises loudly)
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        kcore(und, k=2, max_iter=3)
 
 
 def test_rel_array_hof_null_quantities_match_oracle_semantics(spark):
