@@ -13,7 +13,7 @@ plumbing) — as idiomatic PySpark DataFrame programs:
 - ``schemas``     canonical StructTypes (single source of truth).
 - ``sources``     ingest codecs: reference G-format matrices, parquet tables.
 - ``catalog``     GraphCatalog — one parquet row per named graph
-                  (reference ops 1/2: add/modify = dynamic partition overwrite).
+                  (reference ops 1/2: add/modify = replace the graph's one file).
 - ``operators``   traversal (BFS/DFS-leaf/connected components), dedup,
                   similarity, text analysis, multimodal, relational queries.
 - ``functions``   reusable Column expressions (vector math, text metrics).

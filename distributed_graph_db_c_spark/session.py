@@ -2,9 +2,9 @@
 
 Scale posture: these configs are the local[32] test harness defaults; on a
 real cluster the same code runs unchanged — AQE picks shuffle parallelism
-and handles skew, dynamic partition overwrite gives graph-level "modify"
-semantics (reference primary_server.c:65 whole-file truncate-and-rewrite),
-and Arrow keeps the few pandas-UDF paths batched rather than row-at-a-time.
+and handles skew, dynamic partition overwrite replaces only the partitions
+a partitioned write touches, and Arrow keeps the few pandas-UDF paths
+batched rather than row-at-a-time.
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ def get_spark(app_name: str = "dgdb-spark", shuffle_partitions: int | None = Non
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Reference op 2 "modify" = whole-graph replace; dynamic mode means
-        # overwriting one graph_id partition leaves the rest untouched.
+        # Dynamic mode: a partitioned overwrite replaces only the partitions
+        # it writes and leaves the rest untouched.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Arrow for every pandas-UDF exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -7,9 +7,10 @@ the graph files.  Re-expressed Spark-first:
 
 - ``requests``: the request channel as a streaming DataFrame dispatched by
   ``foreachBatch`` — ops 1/2 replace one graph row in the GraphCatalog
-  (dynamic partition overwrite), ops 3/4 join each request to its graph
-  row and traverse it with row-local SQL expressions (no Python worker),
-  replies land in a sink table instead of a 200-char message buffer.
+  (the graph's one file, swapped in whole), ops 3/4 carry their graph's
+  row, read from its file on the driver, and traverse it with row-local
+  SQL expressions (no Python worker); replies land in a sink table, one
+  file per micro-batch, instead of a 200-char message buffer.
 - ``windows``: watermarked tumbling/sliding/session-window aggregations
   over the events stream.  Builders are batch/stream agnostic — the SAME
   function registers as a batch query (DuckDB-oracle-checked) and runs in

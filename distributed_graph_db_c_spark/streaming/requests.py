@@ -41,7 +41,8 @@ give one row per request (the reply arrays), so each op's reply frame is
 a projection of a local relation: Spark's optimizer (ConvertToLocalRelation)
 evaluates the walk while it plans, and its ``collect`` runs no job.  The
 reply rows are flattened on the driver and published as one parquet file
-per dispatch call (the reference's one ``msgsnd`` per reply).  A
+per dispatch call (the reference's one ``msgsnd`` per reply), named after
+the micro-batch's id, so a replayed batch leaves one reply set.  A
 micro-batch costs one Spark job, the collect of the batch itself, however
 many writes and reads it carries.
 """
@@ -135,8 +136,13 @@ def _publish(table: pa.Table, directory: str, name: str) -> None:
     os.replace(tmp, os.path.join(directory, name))
 
 
-def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: str) -> None:
-    """Process one drained micro-batch: writes (seq order), then reads."""
+def dispatch_requests(
+    catalog: GraphCatalog, batch_df: DataFrame, results_path: str, batch_id: int | None = None
+) -> None:
+    """Process one drained micro-batch: writes (seq order), then reads.
+    The reply file is named after ``batch_id`` when one is given, so a
+    replayed micro-batch replaces its own replies; without one it gets a
+    unique name."""
     # the whole batch to the driver once: the SHM handoff equivalent, small
     # by model; sorted here because orderBy's range sampling costs two jobs
     rows = sorted(batch_df.collect(), key=lambda r: r["seq"])
@@ -157,14 +163,17 @@ def dispatch_requests(catalog: GraphCatalog, batch_df: DataFrame, results_path: 
         return
     # one reply file per call, empty when no read reached a reply row
     os.makedirs(results_path, exist_ok=True)
-    _publish(read_replies(catalog, reads), results_path, f"part-{uuid.uuid4().hex}.parquet")
+    name = uuid.uuid4().hex if batch_id is None else f"batch-{batch_id}"
+    _publish(read_replies(catalog, reads), results_path, f"part-{name}.parquet")
 
 
 def request_dispatcher(catalog: GraphCatalog, results_path: str):
-    """foreachBatch callback closing over the catalog and results sink."""
+    """foreachBatch callback closing over the catalog and results sink.
+    ``foreachBatch`` is at-least-once: a replayed batch id rewrites the
+    same reply file."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        dispatch_requests(catalog, batch_df, results_path)
+        dispatch_requests(catalog, batch_df, results_path, batch_id)
 
     return handle
 

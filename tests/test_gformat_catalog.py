@@ -149,10 +149,10 @@ def test_put_all_edgeless_replacement(spark, tmp_path):
 
 def test_catalog_add_modify_isolation(spark, tmp_path):
     """Reference ops 1/2: add = create, modify = full replace; writes to one
-    graph never disturb another (per-file writer locks -> partition-level
-    overwrite, SURVEY.md §2.1).  Every write path leaves one dataset with
-    one ``graph_id=K`` directory per graph holding one parquet file (the
-    reference's one G-file per graph)."""
+    graph never disturb another (per-file writer locks -> per-file
+    replace, SURVEY.md §2.1).  Every write path leaves one dataset with
+    one ``graph_id=K`` directory per graph holding one file,
+    ``part-0.parquet`` (the reference's one G-file per graph)."""
     import os
 
     root = tmp_path / "catalog"
@@ -195,13 +195,14 @@ def test_catalog_add_modify_isolation(spark, tmp_path):
     entries = sorted(p.name for p in root.iterdir() if not p.name.startswith(("_", ".")))
     assert entries == [f"graph_id={k}" for k in (1, 2, 3, 4)]
     for name in entries:
-        files = [f for f in os.listdir(root / name) if f.endswith(".parquet")]
-        assert len(files) == 1, (name, files)
+        assert os.listdir(root / name) == ["part-0.parquet"], name
 
 
 def test_catalog_isolation_in_static_overwrite_session(spark, tmp_path):
-    """A session built elsewhere may keep Spark's default STATIC partition
-    overwrite mode; a write must still replace only its own graphs."""
+    """A session built elsewhere may keep Spark's default static partition
+    overwrite mode, which would wipe every other graph on a Spark
+    partition overwrite; the catalog writes each graph's file itself, so
+    a write replaces only its own graphs whatever the session's mode."""
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key)
     spark.conf.set(key, "static")
@@ -240,7 +241,10 @@ def test_put_failure_replaces_no_graph(spark, tmp_path, monkeypatch):
     """A ``put`` that fails leaves the catalog as it was: a payload Arrow
     cannot type raises before anything is written, a write that fails on
     a later graph replaces none of the graphs staged before it, and no
-    ``.put-*`` staging directory is left behind."""
+    ``.put-*`` staging directory, nor any other file, is left behind.
+    ``put_all`` hands its folded rows to ``put``, so an edge with a NULL
+    end or a NULL graph_id raises the same way, and no directory is made
+    for a NULL graph_id."""
     import pyarrow as pa
 
     from distributed_graph_db_c_spark import catalog as catalog_mod
@@ -257,6 +261,12 @@ def test_put_failure_replaces_no_graph(spark, tmp_path, monkeypatch):
     for bad in [(None, [1], []), (2, [1, None], []), (2, [1], [(1, None)]), (2, [1], [None])]:
         with pytest.raises(ValueError, match="null"):
             cat.put([(1, *tri), bad])
+    # put_all: a NULL dst, a NULL edge graph_id, a NULL vertex graph_id
+    for bad_e, bad_v in [([(1, 2, None)], []), ([(None, 1, 2)], []), ([], [(None, 1)])]:
+        edges = spark.createDataFrame([(1, 1, 2), *bad_e], "graph_id int, src long, dst long")
+        vertices = spark.createDataFrame([(1, 1), (1, 2), (2, 1), *bad_v], "graph_id int, id long")
+        with pytest.raises(ValueError, match="null"):
+            cat.put_all(edges, vertices)
 
     write = catalog_mod.pq.write_table
     calls = []
@@ -274,13 +284,18 @@ def test_put_failure_replaces_no_graph(spark, tmp_path, monkeypatch):
 
     assert len(calls) == 2
     assert not [p.name for p in root.iterdir() if p.name.startswith(".put-")]
+    # no hidden or staged file in any graph's directory: its one file only
+    assert sorted(p.name for p in root.iterdir()) == ["graph_id=1", "graph_id=2"]
+    for part in root.iterdir():
+        assert [f.name for f in part.iterdir()] == ["part-0.parquet"], part
     assert _catalog_rows(cat) == before
 
 
 def test_put_replaces_put_all_graph_identically(spark, tmp_path):
-    """A graph bulk-written by ``put_all`` (a Spark job) and replaced by
-    ``put`` with the same payload (a driver-side ``pyarrow`` write) reads
-    back the same rows through every reader."""
+    """A graph bulk-written by ``put_all`` (edge and vertex rows folded
+    into graph rows by Spark, then written by ``put``) and replaced by
+    ``put`` with the same payload read back the same rows through every
+    reader."""
     star = [[0, 1, 1, 1], [1, 0, 0, 0], [1, 0, 0, 0], [1, 0, 0, 0]]
     graphs = {1: G1_MATRIX, 2: star, 3: [[0] * 3 for _ in range(3)]}
     cat = GraphCatalog(spark, str(tmp_path / "catalog"))
@@ -290,6 +305,75 @@ def test_put_replaces_put_all_graph_identically(spark, tmp_path):
     assert spark_written["graph_ids"] == [1, 2, 3]
     cat.put([(gid, *_payload(m)) for gid, m in graphs.items()])
     assert _catalog_rows(cat) == spark_written
+
+
+def test_concurrent_puts_and_reads_never_lose_the_graph(tmp_path):
+    """Readers-writers isolation with no lock (primary_server.c:60,150;
+    secondary_server.c:229-234): while two writers keep replacing one
+    graph, alternating a 3-vertex and a 30-vertex payload, two readers
+    always find it, read it without error and get one of the two
+    payloads, and the graph left at the end is one intact file.  Pure
+    ``pyarrow``: no Spark session."""
+    import os
+    import threading
+    import time
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    def path(n):
+        steps = [(i, i + 1) for i in range(1, n)]
+        return list(range(1, n + 1)), steps + [(b, a) for a, b in steps]
+
+    payloads = [path(3), path(30)]
+    root = tmp_path / "catalog"
+    cat = GraphCatalog(None, str(root))
+    cat.put([(1, *payloads[0])])
+    outcomes = Counter()
+    examples = {}
+    deadline = time.monotonic() + 2.0
+
+    def record(kind, example=None):
+        outcomes[kind] += 1
+        examples.setdefault(kind, example)
+
+    def writer(first):
+        i = first
+        while time.monotonic() < deadline:
+            try:
+                cat.put([(1, *payloads[i % 2])])
+                record("put")
+            except Exception as exc:  # noqa: BLE001 - counted, then asserted
+                record("write error", repr(exc))
+            i += 1
+
+    def reader():
+        while time.monotonic() < deadline:
+            try:
+                got = cat.stored_edges([1])
+            except Exception as exc:  # noqa: BLE001 - counted, then asserted
+                record("read error", repr(exc))
+                continue
+            if 1 not in got:
+                record("missing")
+                continue
+            edges = sorted((e["src"], e["dst"]) for e in got[1][0].as_py())
+            record("read" if edges in [sorted(es) for _, es in payloads] else "wrong", edges)
+
+    threads = [threading.Thread(target=writer, args=(k,)) for k in (0, 1)]
+    threads += [threading.Thread(target=reader) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+
+    assert outcomes["put"] > 0 and outcomes["read"] > 0, outcomes
+    assert set(outcomes) == {"put", "read"}, (outcomes, examples)
+    assert sorted(os.listdir(root)) == ["graph_id=1"]
+    assert os.listdir(root / "graph_id=1") == ["part-0.parquet"]
+    (row,) = pq.read_table(root / "graph_id=1" / "part-0.parquet").to_pylist()
+    stored = (sorted(row["vertices"]), sorted((e["src"], e["dst"]) for e in row["edges"]))
+    assert stored in [(vs, sorted(es)) for vs, es in payloads]
 
 
 def test_catalog_drop(spark, tmp_path):

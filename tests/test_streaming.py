@@ -618,6 +618,40 @@ def test_dispatch_sees_another_catalogs_writes(spark, tmp_path):
     }
 
 
+def test_replayed_batch_leaves_one_reply_set(spark, tmp_path):
+    """``foreachBatch`` is at-least-once: the handler called twice with
+    one batch id (a replayed micro-batch) leaves one reply file and one
+    reply per reached vertex; another batch id adds its own file."""
+    from distributed_graph_db_c_spark.catalog import GraphCatalog
+    from distributed_graph_db_c_spark.streaming.requests import (
+        REQUEST_SCHEMA,
+        RESULT_SCHEMA,
+        request_dispatcher,
+    )
+
+    cat = GraphCatalog(spark, str(tmp_path / "catalog"))
+    results = tmp_path / "results"
+    handle = request_dispatcher(cat, str(results))
+    path = [(1, 2), (2, 3)]
+    rows = [(1, 1, 1, [1, 2, 3], path, None), (2, 4, 1, None, None, 1), (3, 3, 1, None, None, 1)]
+    batch = spark.createDataFrame(rows, REQUEST_SCHEMA)
+    want = sorted(
+        [(2, 4, 1, v, lvl) for v, lvl in _reply_oracle(3, path, 4, 1)]
+        + [(3, 3, 1, v, lvl) for v, lvl in _reply_oracle(3, path, 3, 1)]
+    )
+
+    def replies():
+        return sorted(tuple(r) for r in spark.read.schema(RESULT_SCHEMA).parquet(str(results)).collect())
+
+    handle(batch, 7)
+    handle(batch, 7)
+    assert len(list(results.glob("*.parquet"))) == 1
+    assert replies() == want
+    handle(batch, 8)
+    assert len(list(results.glob("*.parquet"))) == 2
+    assert replies() == sorted(want + want)
+
+
 def test_serving_frames_run_no_python(spark, tmp_path, monkeypatch):
     """The frames a served micro-batch builds run inside the JVM, and
     neither a write nor a reply runs a Spark job: ``put`` writes on the
